@@ -799,12 +799,15 @@ def embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     float accumulation order anywhere, so the DuckDB twin matches
     bit-for-bit.
 
-    Scale shape: points live in long form (vec_id, dim, val) — the
-    assign step is an equi-join on ``dim`` (a broadcast of K*DIM centroid
-    rows) + one partial agg per (vec, cluster); the update is one partial
-    agg per (cluster, dim). Both are map-side-combinable shuffles; no
-    step is quadratic in corpus size, and K iterations are K linear
-    passes (at 100 TB you cache the long-form points once and reuse)."""
+    Scale shape: each point is one row holding its fixed-point
+    coordinate array ``va`` (``kmeans_points``). The assign step is
+    in-row: the K centroids ride one broadcast row and every point
+    computes its K distances and the argmin itself, with no shuffle
+    (``kmeans_assign_lazy``). The update posexplodes ``va`` to
+    (vec_id, dim, val) map-side and runs one partial agg per
+    (cluster, dim). No step is quadratic in corpus size, and the
+    KMEANS_ITERS rounds are that many linear passes (at 100 TB you
+    cache the points once and reuse them)."""
     # try/finally cache hygiene (same idiom as dedup_clusters /
     # kg_pagerank): the long-form points cache backs every iteration,
     # the K-row result is eagerly cut so the cache is unreferenced, and

@@ -33,6 +33,8 @@ Scale notes (100 TB design point):
 from __future__ import annotations
 
 import os
+import threading
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -363,6 +365,21 @@ def chunks_with_embeddings_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 # runs stay hermetic (cold path ≡ warm path is asserted in
 # tests/test_ingest.py); at 100 TB the warm path is the only sane one —
 # retrieval must not re-chunk and re-embed the corpus per query.
+#
+# Serving cache (``warm_cached``): the research-assistant tools go one
+# step further, like the reference's once-per-agent chunk fetch. Three
+# relations derived from warm stages are held in Spark's cache, one per
+# (session, stage paths): the retrieval relation (chunks ⋈ paper titles,
+# agent_api), the papers relation (``papers_source``) and the KG query
+# relations (``_kg_relations``). Each is keyed on its stages' _SUCCESS
+# commits, so a rebuild — in this process or another — unpersists the
+# old relation and the next call derives and caches the new one; a bare
+# ``.cache()`` would not do, since Spark's CacheManager matches plans by
+# path and keeps serving the old commit's rows. The cold path never
+# goes through this cache (the registry's cold derivations are as
+# before). Memory: about one copy of the chunk table (text +
+# embedding), plus the much smaller papers table and aggregated KG
+# edges, held MEMORY_AND_DISK so pressure spills rather than fails.
 
 WAREHOUSE_ENV = "SPARK_GRAFT_WAREHOUSE"
 
@@ -406,28 +423,81 @@ def _warm_path(
 # stages, so their schemas are deterministic — this memo is the catalog a
 # real 100 TB deployment reads schemas from (tables there are catalog
 # entries, never schema-inferred per query). Keyed on the _SUCCESS commit
-# mtime so a rebuilt stage re-infers exactly once; NO data or results are
-# cached — every query still scans the parquet files in full.
-_STAGE_SCHEMAS: dict[str, tuple[float, object]] = {}
+# (``_commit``) so a rebuilt stage re-infers exactly once; NO data or
+# results are cached — every query still scans the parquet files in full.
+_STAGE_SCHEMAS: dict[str, tuple[tuple[int, int], object]] = {}
+
+
+def _commit(path: str) -> tuple[int, int] | None:
+    """A stage's commit identity: its _SUCCESS marker's (inode, mtime in
+    ns). Every commit writes a new marker, so a rebuild changes it even
+    within one mtime tick. None when there is no local marker (remote
+    URI)."""
+    try:
+        st = os.stat(os.path.join(path, "_SUCCESS"))
+    except OSError:
+        return None
+    return st.st_ino, st.st_mtime_ns
 
 
 def read_stage(spark: SparkSession, path: str) -> DataFrame:
     """Parquet scan of a committed warehouse stage, schema served from
     the session catalog memo (inferred once per commit, see above)."""
-    marker = os.path.join(path, "_SUCCESS")
     if os.environ.get("SPARK_GRAFT_SCHEMA_MEMO", "1") == "0":
         return spark.read.parquet(path)  # measurement/debug kill-switch
-    try:
-        mt = os.path.getmtime(marker)
-    except OSError:
+    commit = _commit(path)
+    if commit is None:
         # remote URI or glob: no local marker to key on — infer as before
         return spark.read.parquet(path)
     hit = _STAGE_SCHEMAS.get(path)
-    if hit is not None and hit[0] == mt:
+    if hit is not None and hit[0] == commit:
         return spark.read.schema(hit[1]).parquet(path)
     df = spark.read.parquet(path)
-    _STAGE_SCHEMAS[path] = (mt, df.schema)
+    _STAGE_SCHEMAS[path] = (commit, df.schema)
     return df
+
+
+# (session, stage paths) -> (their commits, the cached relations); the
+# lock makes check-commit-then-replace atomic under a threaded server.
+_SERVING: dict[tuple, tuple[tuple, tuple[DataFrame, ...]]] = {}
+_SERVING_LOCK = threading.Lock()
+
+
+def warm_cached(
+    spark: SparkSession,
+    sf_dir: str,
+    stages: tuple[str, ...],
+    derive: Callable[..., DataFrame | tuple[DataFrame, ...]],
+    cold: Callable[[], DataFrame | tuple[DataFrame, ...]],
+) -> DataFrame | tuple[DataFrame, ...]:
+    """The serving cache (see the block comment above): ``derive`` over
+    the warm ``stages`` (one ``read_stage`` each, in order), cached and
+    reused until a stage's commit changes; ``cold()`` uncached when any
+    stage is cold. ``derive`` may return one relation or a tuple; each
+    is cached. Stages without a local commit marker (remote URIs) are
+    served uncached."""
+    paths = tuple(_warm_path(sf_dir, st, spark) for st in stages)
+    if not all(paths):
+        return cold()
+    commits = tuple(_commit(p) for p in paths)
+    if None in commits:
+        return derive(*(read_stage(spark, p) for p in paths))
+    key = (spark, paths)
+    with _SERVING_LOCK:
+        hit = _SERVING.get(key)
+        if hit is not None and hit[0] == commits:
+            rels = hit[1]
+            for df in rels:
+                if not df._jdf.storageLevel().useMemory():
+                    df.cache()  # dropped by clear_caches: refill on next use
+        else:
+            if hit is not None:
+                for df in hit[1]:
+                    df.unpersist()
+            out = derive(*(read_stage(spark, p) for p in paths))
+            rels = tuple(df.cache() for df in (out if isinstance(out, tuple) else (out,)))
+            _SERVING[key] = (commits, rels)
+    return rels if len(rels) > 1 else rels[0]
 
 
 def _stage_or(
@@ -449,6 +519,34 @@ def chunks_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     if p:
         return read_stage(spark, p)
     return chunks_with_embeddings_df(spark, sf_dir)
+
+
+# papers_build's column order: the warm stage is hive-partitioned by
+# publication_year, so its scan lists that column last.
+PAPERS_COLUMNS = (
+    "paper_id",
+    "title",
+    "authors",
+    "abstract",
+    "publication_year",
+    "source",
+    "source_url",
+    "categories",
+    "ingested_at",
+)
+
+
+def papers_source(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The papers table for the serving layer (get_paper_details, GET
+    /papers): the ``papers`` checkpoint in papers_build's column order
+    from the serving cache when warm, papers_build otherwise."""
+    return warm_cached(
+        spark,
+        sf_dir,
+        ("papers",),
+        lambda papers: papers.select(*PAPERS_COLUMNS),
+        lambda: papers_build(spark, sf_dir),
+    )
 
 
 @query(
@@ -1010,22 +1108,27 @@ def _kg_relations(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFram
 
     edges: undirected co-occurrence weights aggregated over papers
     (src < tgt canonical); firsts: (node_id, name_normalized, name) with
-    first-writer-wins naming (M7). Served from the kg_nodes/kg_edges
-    warehouse checkpoints when warm — summing the per-paper checkpoint
-    weights gives exactly the cold path's pair counts — and derived from
-    raw text otherwise (the reference re-queries its warehouse the same
-    way, tools.py:182-217, rather than re-running NER per query)."""
-    pn = _warm_path(sf_dir, "kg_nodes", spark)
-    pe = _warm_path(sf_dir, "kg_edges", spark)
-    if pn and pe:
-        nodes = read_stage(spark, pn)
-        edges = (
-            read_stage(spark, pe)
-            .groupBy("source_node_id", "target_node_id")
-            .agg(F.sum("weight").alias("weight"))
-        )
-        firsts = nodes.select("node_id", "name_normalized", "name")
-        return edges, firsts
+    first-writer-wins naming (M7). Served from the serving cache over the
+    kg_nodes/kg_edges warehouse checkpoints when warm — summing the
+    per-paper checkpoint weights gives exactly the cold path's pair
+    counts — and derived from raw text otherwise (the reference
+    re-queries its warehouse the same way, tools.py:182-217, rather than
+    re-running NER per query)."""
+    return warm_cached(
+        spark,
+        sf_dir,
+        ("kg_nodes", "kg_edges"),
+        lambda nodes, edges: (
+            edges.groupBy("source_node_id", "target_node_id").agg(
+                F.sum("weight").alias("weight")
+            ),
+            nodes.select("node_id", "name_normalized", "name"),
+        ),
+        lambda: _kg_relations_cold(spark, sf_dir),
+    )
+
+
+def _kg_relations_cold(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     ents = chunk_entities_df(spark, sf_dir).select(
         "chunk_id", "paper_id", "chunk_index", "pos", "token", "name_normalized", "node_id"
     )

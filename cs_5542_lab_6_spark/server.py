@@ -14,6 +14,14 @@ The route surface, request/response JSON shapes, status codes, and the
 confidence = round(top citation score, 3) rule (backend/app.py:96) are
 the reference's. The global agent instantiation at server build time
 mirrors backend/app.py:24 — one agent, shared history across requests.
+
+With a warm warehouse, ``GET /papers`` and the agent's tools are served
+from Spark-cached relations (pipeline/corpus.py, ``warm_cached``): the
+papers table, the chunk table joined with titles (about one copy of the
+chunk table in memory) and the aggregated KG edges. Each is refreshed
+when a warehouse stage it reads is recommitted, by this process or
+another. With a cold warehouse the routes derive per request, as
+before, and the serving cache holds nothing.
 """
 
 from __future__ import annotations
@@ -27,7 +35,9 @@ from typing import Any, Callable
 from pyspark.sql import SparkSession
 
 from .agent_loop import ResearchAgent
-from .pipeline.corpus import papers_build
+# papers_build stays bound here for callers that patch it by name
+# (perfbench's traced runs); the routes read papers_source.
+from .pipeline.corpus import papers_build, papers_source  # noqa: F401
 
 WSGIApp = Callable[[dict, Callable], list[bytes]]
 
@@ -279,7 +289,7 @@ def create_app(
                 for p in environ.get("QUERY_STRING", "").split("&")
                 if "=" in p
             )
-            papers = papers_build(spark, sf_dir)
+            papers = papers_source(spark, sf_dir)
             try:
                 limit = (
                     int(params["limit"])

@@ -24,7 +24,34 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# Share of MemAvailable the single local JVM's heap may take when
+# $SPARK_GRAFT_DRIVER_MEM does not pin it; the Python workers, page cache
+# and off-heap buffers need the rest.
+HEAP_SHARE = 0.4
+MIN_HEAP_MB = 1024
+
+
+def host_cpus() -> int:
+    """$SPARK_GRAFT_CPUS, else the CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def mem_available_mb() -> int:
+    with open("/proc/meminfo", encoding="ascii") as f:
+        for line in f:
+            if line.startswith("MemAvailable:"):
+                return int(line.split()[1]) // 1024
+    raise RuntimeError("MemAvailable missing from /proc/meminfo")
+
+
+def driver_memory() -> str:
+    """$SPARK_GRAFT_DRIVER_MEM, else HEAP_SHARE of available memory (at
+    least MIN_HEAP_MB): the heap is committed up front when pre-touched,
+    so it must fit the host it starts on."""
+    pinned = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if pinned:
+        return pinned
+    return f"{max(MIN_HEAP_MB, int(mem_available_mb() * HEAP_SHARE))}m"
 
 
 def get_spark(
@@ -40,10 +67,10 @@ def get_spark(
     before JVM start, so we only apply it when constructing a fresh
     session.
     """
-    cpus = int(DEFAULT_CPUS)
+    cpus = host_cpus()
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
+    driver_mem = driver_memory()
 
     builder = (
         SparkSession.builder.master(master)
@@ -109,7 +136,7 @@ def get_spark(
         # one JVM per process, so each process pays it at most once.
         # OPT-IN (pretouch=True param, or $SPARK_GRAFT_PRETOUCH=1 for CLI
         # processes like bench.py that own their whole environment): on a
-        # degraded window the 24g pre-fault took 130-214s, which is fine
+        # degraded window a 24g pre-fault took 130-214s, which is fine
         # for a process that owns its startup but a timeout risk inside
         # any harness that bounds session creation (e.g. a driver smoke
         # check, or a CLI subprocess spawned under a test timeout — the

@@ -25,11 +25,10 @@ def spark():
     # form, NOT the env var: subprocess-spawning tests (test_cli) must
     # not inherit a 130-214s pre-fault inside their own timeouts.
     #
-    # RAM floor: pretouch COMMITS AND FAULTS the full driver heap
-    # (default $SPARK_GRAFT_DRIVER_MEM = 24g) at session start — fine on
-    # this 125 GB VM, an OOM on small hosts. Set
-    # SPARK_GRAFT_TEST_DRIVER_MEM (e.g. "4g") to shrink the test JVM
-    # without touching what bench.py / the CLI use.
+    # RAM floor: pretouch COMMITS AND FAULTS the full driver heap at
+    # session start; unpinned, session.driver_memory sizes it from the
+    # host's MemAvailable. Set SPARK_GRAFT_TEST_DRIVER_MEM (e.g. "4g")
+    # to pin the test JVM without touching what bench.py / the CLI use.
     test_mem = os.environ.get("SPARK_GRAFT_TEST_DRIVER_MEM")
     if test_mem:
         os.environ["SPARK_GRAFT_DRIVER_MEM"] = test_mem

@@ -162,6 +162,9 @@ def test_warm_warehouse_queries_equal_cold(spark, sf_dir, tmp_path, monkeypatch)
         # verification/audit queries count the checkpoints when warm
         "corpus_verify",
         "corpus_delete_cascade",
+        # agent tools: served from the warm serving cache (warm_cached)
+        "agent_search_papers",
+        "agent_paper_details",
     ]
     qs = all_queries()
 
@@ -170,6 +173,7 @@ def test_warm_warehouse_queries_equal_cold(spark, sf_dir, tmp_path, monkeypatch)
         cold = {
             n: sorted(map(tuple, qs[n](spark, sf_dir).collect())) for n in names
         }
+        cold_served = _served_responses(spark, sf_dir, tmp_path / "cold")
 
         root = tmp_path / "wh"
         out = str(root / os.path.basename(sf_dir.rstrip("/")))
@@ -188,10 +192,84 @@ def test_warm_warehouse_queries_equal_cold(spark, sf_dir, tmp_path, monkeypatch)
         warm = {
             n: sorted(map(tuple, qs[n](spark, sf_dir).collect())) for n in names
         }
+        warm_served = _served_responses(spark, sf_dir, tmp_path / "warm")
 
         assert warm == cold
+        assert warm_served == cold_served
     finally:
         clear_caches(spark)
+
+
+_DEEP_QUESTION = "spark join filter performance"
+
+
+def _served_responses(spark, sf_dir, work) -> dict:
+    """A deep ``POST /query`` (search_papers, then get_paper_details on the
+    top hit and search_knowledge_graph on the question) and a ``GET
+    /papers`` page through a fresh ``create_app``, with every tool result
+    the policy saw — the serving surface the warm cache answers."""
+    import io
+    import json
+
+    from cs_5542_lab_6_spark.agent_loop import ResearchAgent
+    from cs_5542_lab_6_spark.server import create_app
+
+    tool_results: list = []
+
+    def policy(messages):
+        called = [
+            tc["name"]
+            for m in messages
+            if m["role"] == "assistant"
+            for tc in m.get("tool_calls", ())
+        ]
+        last = next((m["content"] for m in reversed(messages) if m["role"] == "tool"), "")
+        if "search_papers" not in called:
+            return {"tool_calls": [{"name": "search_papers",
+                                    "arguments": {"query": _DEEP_QUESTION, "top_k": 5}}]}
+        if "get_paper_details" not in called:
+            top = json.loads(last)[0]["paper_id"]
+            return {"tool_calls": [
+                {"name": "get_paper_details", "arguments": {"paper_id": top}},
+                {"name": "search_knowledge_graph", "arguments": {"query": _DEEP_QUESTION}},
+            ]}
+        if "summarize_context" not in called:
+            return {"tool_calls": [{"name": "summarize_context",
+                                    "arguments": {"question": _DEEP_QUESTION}}]}
+        tool_results.extend(m["content"] for m in messages if m["role"] == "tool")
+        return {"content": json.loads(last)}
+
+    work.mkdir()
+    app = create_app(
+        spark,
+        sf_dir,
+        agent=ResearchAgent(spark, sf_dir, policy=policy),
+        history_path=str(work / "history.json"),
+    )
+
+    def call(method, path, query="", body=None):
+        raw = json.dumps(body).encode() if body is not None else b""
+        status = []
+        out = b"".join(app({
+            "REQUEST_METHOD": method,
+            "PATH_INFO": path,
+            "QUERY_STRING": query,
+            "CONTENT_LENGTH": str(len(raw)),
+            "wsgi.input": io.BytesIO(raw),
+        }, lambda s, h: status.append(s)))
+        assert status == ["200 OK"], (path, status, out[:300])
+        return json.loads(out)
+
+    ask = call("POST", "/query", body={"question": _DEEP_QUESTION})
+    ask.pop("latency_ms")
+    # hits, paper details and KG neighbors all non-empty
+    assert all(json.loads(t) for t in tool_results[:3]), tool_results
+    assert ask["tools_used"] == [
+        "search_papers", "get_paper_details", "search_knowledge_graph", "summarize_context"
+    ]
+    page = call("GET", "/papers", query="limit=20&offset=40")
+    assert len(page) == 20
+    return {"ask": ask, "tools": tool_results, "page": page}
 
 
 def test_partitioned_checkpoint_scan_prunes_directories(spark, sf_dir, tmp_path):

@@ -224,3 +224,74 @@ def test_real_server_round_trip(spark, sf_dir, tmp_path):
         assert json.loads(resp.read()) == {"status": "ok"}
     t.join(timeout=10)
     httpd.server_close()
+
+
+def test_warm_papers_refresh_on_stage_recommit(spark, sf_dir, tmp_path, monkeypatch):
+    """The serving cache follows the warehouse: another writer rewrites
+    the warm ``papers`` stage in place (new files, a changed title, an
+    extra column, a new _SUCCESS), and the next request serves the new
+    row. The old commit's cached relation is unpersisted, the stage
+    schema is inferred again, and answers stay correct after
+    ``clear_caches``."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from cs_5542_lab_6_spark.pipeline import corpus as C
+    from cs_5542_lab_6_spark.pipeline import ingest as I
+    from cs_5542_lab_6_spark.session import clear_caches
+
+    root = tmp_path / "wh"
+    stage = root / os.path.basename(sf_dir.rstrip("/")) / "papers"
+    monkeypatch.setattr(I, "STAGES", tuple(s for s in I.STAGES if s[0] == "papers"))
+    I.build_corpus(spark, sf_dir, str(stage.parent), resume=False)
+    monkeypatch.setenv(C.WAREHOUSE_ENV, str(root))
+    c = Client(create_app(spark, sf_dir, history_path=str(tmp_path / "h.json")))
+
+    def titles() -> dict[str, str]:
+        status, rows = c.request("GET", "/papers?limit=0")
+        assert status == 200
+        return {r["paper_id"]: r["title"] for r in rows}
+
+    def persisted() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persisted()
+    assert titles()["doc_1"] == "Document 1"
+    first_commit = persisted() - before
+    assert first_commit, "the warm papers relation was not cached"
+
+    # another writer: rewrite every data file under a new name, with one
+    # changed title and an extra column, then commit a new _SUCCESS
+    for d, _, names in os.walk(stage):
+        for n in names:
+            if not n.endswith(".parquet"):
+                continue
+            t = pq.read_table(os.path.join(d, n), partitioning=None)
+            col = t.column("title").to_pylist()
+            ids = t.column("paper_id").to_pylist()
+            t = t.set_column(
+                t.schema.get_field_index("title"),
+                "title",
+                [[("Rewritten 1" if i == "doc_1" else v) for i, v in zip(ids, col)]],
+            ).append_column("rewritten_by", [["pyarrow"] * len(ids)])
+            # drop Spark's serialized schema so readers see the new column
+            t = t.replace_schema_metadata(None)
+            os.remove(os.path.join(d, n))
+            pq.write_table(  # INT96 timestamps, as Spark writes them
+                t, os.path.join(d, "rewritten-" + n), use_deprecated_int96_timestamps=True
+            )
+    os.remove(stage / "_SUCCESS")
+    (stage / "_SUCCESS").write_bytes(b"")
+
+    got = titles()
+    assert got["doc_1"] == "Rewritten 1"
+    assert got["doc_2"] == "Document 2"
+    assert not first_commit & persisted(), "the old commit is still cached"
+    assert "rewritten_by" in C.read_stage(spark, str(stage)).columns
+
+    clear_caches(spark)
+    assert titles()["doc_1"] == "Rewritten 1"
+    (papers,) = C._SERVING[(spark, (str(stage),))][1]
+    assert papers.storageLevel.useMemory  # refilled after clear_caches
+    clear_caches(spark)
