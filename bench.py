@@ -326,7 +326,11 @@ def main() -> None:
     from cs_5542_lab_6_spark.pipeline import corpus
     from cs_5542_lab_6_spark.pipeline.ingest import build_corpus
     from cs_5542_lab_6_spark.registry import all_queries
-    from cs_5542_lab_6_spark.session import clear_caches, get_spark
+    from cs_5542_lab_6_spark.session import (
+        clear_caches,
+        codegen_compilations,
+        get_spark,
+    )
 
     # Pre-fault the heap at JVM start (session.py: AlwaysPreTouch) so
     # this VM's intermittent slow anonymous-page backing lands at
@@ -387,7 +391,11 @@ def main() -> None:
     # beside it) actually commit to, not wherever TMPDIR points
     probe_dir = os.environ[corpus.WAREHOUSE_ENV]
     fsync_samples = [_fsync_ms(base_dir=probe_dir)]
+    # classes compiled from generated code per pass: 0 after the first
+    # pass means every pass reused the code the session already compiled
+    compiled_per_pass = []
     for _ in range(RUNS):
+        compiled_before = codegen_compilations(spark)
         for name in names:
             t0 = time.perf_counter()
             _noop_materialize(queries[name](spark, SF_DIR))
@@ -399,8 +407,15 @@ def main() -> None:
             # ran ~2x faster with per-query clearing than with caches
             # accumulating across the whole headline set)
             clear_caches(spark)
+        compiled_per_pass.append(codegen_compilations(spark) - compiled_before)
         # one storage sample per pass
         fsync_samples.append(_fsync_ms(base_dir=probe_dir))
+    codegen = {
+        "cache_max_entries": int(
+            spark.conf.get("spark.sql.codegen.cache.maxEntries")
+        ),
+        "compilations_per_pass": compiled_per_pass,
+    }
     timings: dict[str, float] = {}
     detail: dict[str, dict] = {}
     for name in names:
@@ -462,6 +477,7 @@ def main() -> None:
         # storage bursts the CPU probe can't see — flat calibration with
         # elevated fsync samples = storage noise window, not a regression.
         "fsync_ms": fsync_samples,
+        "codegen": codegen,
     }
     print(json.dumps(full))
     # Persist the complete per-query runs/medians to a repo file (VERDICT
@@ -497,6 +513,7 @@ def main() -> None:
                 "loadavg": full["loadavg"],
                 "calibration_sec": full["calibration_sec"],
                 "fsync_ms": fsync_samples,
+                "codegen": codegen,
                 "compact": True,
             }
         )

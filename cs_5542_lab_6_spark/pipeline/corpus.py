@@ -367,11 +367,12 @@ def chunks_with_embeddings_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 # retrieval must not re-chunk and re-embed the corpus per query.
 #
 # Serving cache (``warm_cached``): the research-assistant tools go one
-# step further, like the reference's once-per-agent chunk fetch. Three
+# step further, like the reference's once-per-agent chunk fetch. Four
 # relations derived from warm stages are held in Spark's cache, one per
 # (session, stage paths): the retrieval relation (chunks ⋈ paper titles,
-# agent_api), the papers relation (``papers_source``) and the KG query
-# relations (``_kg_relations``). Each is keyed on its stages' _SUCCESS
+# agent_api), the papers relation (``papers_source``), the KG query
+# relations (``_kg_relations``) and the entity mentions the KG builders
+# share (``chunk_entities_df``). Each is keyed on its stages' _SUCCESS
 # commits, so a rebuild — in this process or another — unpersists the
 # old relation and the next call derives and caches the new one; a bare
 # ``.cache()`` would not do, since Spark's CacheManager matches plans by
@@ -771,12 +772,32 @@ def chunk_entities_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     naming window, the paper_count agg) — one materialization instead of
     repeated chunk+explode+window recomputation, mirroring the
     reference's chunk cache idiom (agent.py:48-63). MEMORY_AND_DISK, so
-    at 100 TB it spills instead of OOMing.
+    at 100 TB it spills instead of OOMing. Warm, it is served through
+    ``warm_cached`` keyed on the ``chunks`` stage commit, so a rebuilt
+    stage never serves the old commit's entities (the extractor is the
+    one configured when the commit is first read).
 
     Mention extraction swaps between the Catalyst tokenizer (default,
     oracle-checkable) and a real NER pandas UDF when
     $SPARK_GRAFT_NER_MODEL is set (functions/ner.py) — the downstream
     normalize → length-filter → first-seen contract is shared."""
+    # Warm: entity extraction starts from the materialized ``chunks``
+    # checkpoint (a 4-column pruned parquet scan) instead of re-cleaning
+    # and re-chunking raw documents — this also accelerates the
+    # warehouse build itself, since the KG stages run after the chunks
+    # stage in ingest.STAGES (warm ≡ cold via test_ingest.py).
+    return warm_cached(
+        spark,
+        sf_dir,
+        ("chunks",),
+        lambda chunks: _chunk_entities(
+            chunks.select("chunk_id", "paper_id", "chunk_index", "text_content")
+        ),
+        lambda: _chunk_entities(_chunk_documents(spark, sf_dir)).cache(),
+    )
+
+
+def _chunk_entities(chunks: DataFrame) -> DataFrame:
     from ..functions.ner import extract_mentions_udf, ner_active
 
     # r16 OPTIMIZATION (guide §2.4 — remove shuffles outright): the
@@ -804,20 +825,6 @@ def chunk_entities_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     # UnsafeArrayData copies applied to exploding the RAW token array —
     # thousands of elements per chunk; the entity array exploded here is
     # already deduped, an order of magnitude smaller.)
-    #
-    # Warm: entity extraction starts from the materialized ``chunks``
-    # checkpoint (a 4-column pruned parquet scan) instead of re-cleaning
-    # and re-chunking raw documents — this also accelerates the
-    # warehouse build itself, since the KG stages run after the chunks
-    # stage in ingest.STAGES (warm ≡ cold via test_ingest.py).
-    p = _warm_path(sf_dir, "chunks", spark)
-    chunks = (
-        read_stage(spark, p).select(
-            "chunk_id", "paper_id", "chunk_index", "text_content"
-        )
-        if p
-        else _chunk_documents(spark, sf_dir)
-    )
     mentions = (
         extract_mentions_udf("text_content")
         if ner_active()
@@ -851,7 +858,6 @@ def chunk_entities_df(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("e.name_normalized").alias("name_normalized"),
             F.expr(_NODE_ID_SQL.format(n="e.name_normalized")).alias("node_id"),
         )
-        .cache()
     )
 
 

@@ -16,6 +16,10 @@ on local[N]:
   transfer, not pickled rows.
 - Session timezone pinned to UTC so event-time semantics match the DuckDB
   oracle and are portable across clusters.
+- Generated-code cache sized to the registry's working set
+  (``CODEGEN_CACHE_ENTRIES``): a session cycling through more queries
+  than Spark's default 100-class LRU holds recompiles every class with
+  Janino, and the JIT compiles each new class again.
 """
 
 from __future__ import annotations
@@ -29,6 +33,15 @@ from pyspark.sql import SparkSession
 # and off-heap buffers need the rest.
 HEAP_SHARE = 0.4
 MIN_HEAP_MB = 1024
+
+# spark.sql.codegen.cache.maxEntries (a static conf, so set at session
+# build). One sweep of all 205 registry queries over the benchmark-sized
+# inputs generates 3,776 distinct classes, at about 16 KB of metaspace
+# each (about 65 MB with the cache full). Spark's default of 100 is
+# smaller than one query_suite pass (about 175 classes), so the LRU
+# evicted every class before its reuse and each pass recompiled 170-172
+# of them; with this size every pass after the first compiles none.
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def host_cpus() -> int:
@@ -86,6 +99,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # --- determinism / oracle parity ---------------------------------
         .config("spark.sql.session.timeZone", "UTC")
+        # --- generated code reused across queries (see the constant) ---
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # custom Python DataSource pushdown (sources/api_source.py
         # narrows its page range from idx predicates)
         .config("spark.sql.python.filterPushdown.enabled", "true")
@@ -157,6 +172,14 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_compilations(spark: SparkSession) -> int:
+    """Classes this JVM has compiled from generated code so far (Spark's
+    CodegenMetrics compilation-time histogram counts one per compile;
+    cache hits do not count)."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
 def clear_caches(spark: SparkSession) -> None:

@@ -151,7 +151,9 @@ def _run_to_memory(
     return the materialized memory-sink table. With ``sf_dir`` the
     stateful shuffle width is derived from the source size (see
     ``_stream_state_partitions``) for the duration of the run; the
-    session conf is restored afterwards."""
+    session conf is restored afterwards. The sink's temp view is dropped
+    once read: the returned DataFrame keeps the rows, the catalog does
+    not."""
     name = f"{base}_{next(_RUN_IDS)}"
     spark = sdf.sparkSession
     parts = _stream_state_partitions(spark, sf_dir) if sf_dir else None
@@ -169,7 +171,9 @@ def _run_to_memory(
         q.awaitTermination()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", saved)
-    return spark.table(name)
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 @query(

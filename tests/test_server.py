@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import io
 import json
+import os
 
 import pytest
 
@@ -226,6 +227,37 @@ def test_real_server_round_trip(spark, sf_dir, tmp_path):
     httpd.server_close()
 
 
+def _set_where(table, col: str, key: str, match: str, value):
+    """``table`` with ``col`` set to ``value`` on rows whose ``key`` is
+    ``match``."""
+    keys = table.column(key).to_pylist()
+    vals = table.column(col).to_pylist()
+    return table.set_column(
+        table.schema.get_field_index(col),
+        col,
+        [[value if k == match else v for k, v in zip(keys, vals)]],
+    )
+
+
+def _recommit_stage(stage, rewrite) -> None:
+    """Another writer: rewrite every data file of a warehouse stage under
+    a new name through ``rewrite`` (a pyarrow Table -> Table), then
+    commit a new _SUCCESS."""
+    import pyarrow.parquet as pq
+
+    for d, _, names in os.walk(stage):
+        for n in names:
+            if not n.endswith(".parquet"):
+                continue
+            t = rewrite(pq.read_table(os.path.join(d, n), partitioning=None))
+            os.remove(os.path.join(d, n))
+            pq.write_table(  # INT96 timestamps, as Spark writes them
+                t, os.path.join(d, "rewritten-" + n), use_deprecated_int96_timestamps=True
+            )
+    os.remove(stage / "_SUCCESS")
+    (stage / "_SUCCESS").write_bytes(b"")
+
+
 def test_warm_papers_refresh_on_stage_recommit(spark, sf_dir, tmp_path, monkeypatch):
     """The serving cache follows the warehouse: another writer rewrites
     the warm ``papers`` stage in place (new files, a changed title, an
@@ -233,10 +265,6 @@ def test_warm_papers_refresh_on_stage_recommit(spark, sf_dir, tmp_path, monkeypa
     row. The old commit's cached relation is unpersisted, the stage
     schema is inferred again, and answers stay correct after
     ``clear_caches``."""
-    import os
-
-    import pyarrow.parquet as pq
-
     from cs_5542_lab_6_spark.pipeline import corpus as C
     from cs_5542_lab_6_spark.pipeline import ingest as I
     from cs_5542_lab_6_spark.session import clear_caches
@@ -261,28 +289,14 @@ def test_warm_papers_refresh_on_stage_recommit(spark, sf_dir, tmp_path, monkeypa
     first_commit = persisted() - before
     assert first_commit, "the warm papers relation was not cached"
 
-    # another writer: rewrite every data file under a new name, with one
-    # changed title and an extra column, then commit a new _SUCCESS
-    for d, _, names in os.walk(stage):
-        for n in names:
-            if not n.endswith(".parquet"):
-                continue
-            t = pq.read_table(os.path.join(d, n), partitioning=None)
-            col = t.column("title").to_pylist()
-            ids = t.column("paper_id").to_pylist()
-            t = t.set_column(
-                t.schema.get_field_index("title"),
-                "title",
-                [[("Rewritten 1" if i == "doc_1" else v) for i, v in zip(ids, col)]],
-            ).append_column("rewritten_by", [["pyarrow"] * len(ids)])
-            # drop Spark's serialized schema so readers see the new column
-            t = t.replace_schema_metadata(None)
-            os.remove(os.path.join(d, n))
-            pq.write_table(  # INT96 timestamps, as Spark writes them
-                t, os.path.join(d, "rewritten-" + n), use_deprecated_int96_timestamps=True
-            )
-    os.remove(stage / "_SUCCESS")
-    (stage / "_SUCCESS").write_bytes(b"")
+    # one changed title and an extra column
+    _recommit_stage(
+        stage,
+        lambda t: _set_where(t, "title", "paper_id", "doc_1", "Rewritten 1")
+        .append_column("rewritten_by", [["pyarrow"] * t.num_rows])
+        # drop Spark's serialized schema so readers see the new column
+        .replace_schema_metadata(None),
+    )
 
     got = titles()
     assert got["doc_1"] == "Rewritten 1"
@@ -294,4 +308,34 @@ def test_warm_papers_refresh_on_stage_recommit(spark, sf_dir, tmp_path, monkeypa
     assert titles()["doc_1"] == "Rewritten 1"
     (papers,) = C._SERVING[(spark, (str(stage),))][1]
     assert papers.storageLevel.useMemory  # refilled after clear_caches
+    clear_caches(spark)
+
+
+def test_warm_entities_refresh_on_chunks_recommit(spark, sf_dir, tmp_path, monkeypatch):
+    """The entity mentions the KG queries share follow the warm ``chunks``
+    stage: after another writer rewrites a chunk's text, the next warm
+    KG query sees the new entity, not the old commit's cached ones."""
+    from cs_5542_lab_6_spark.pipeline import corpus as C
+    from cs_5542_lab_6_spark.pipeline import ingest as I
+    from cs_5542_lab_6_spark.session import clear_caches
+
+    root = tmp_path / "wh"
+    stage = root / os.path.basename(sf_dir.rstrip("/")) / "chunks"
+    monkeypatch.setattr(I, "STAGES", tuple(s for s in I.STAGES if s[0] == "chunks"))
+    I.build_corpus(spark, sf_dir, str(stage.parent), resume=False)
+    monkeypatch.setenv(C.WAREHOUSE_ENV, str(root))
+
+    def nodes_of(chunk_id: str) -> set[str]:
+        rows = C.kg_map_build(spark, sf_dir).where(f"chunk_id = '{chunk_id}'").collect()
+        return {r.node_id for r in rows}
+
+    chunk_id = C.read_stage(spark, str(stage)).first().chunk_id
+    assert "node_zyzzyva" not in nodes_of(chunk_id)
+
+    _recommit_stage(
+        stage,
+        lambda t: _set_where(t, "text_content", "chunk_id", chunk_id, "zyzzyva"),
+    )
+
+    assert nodes_of(chunk_id) == {"node_zyzzyva"}
     clear_caches(spark)

@@ -8,7 +8,9 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
+from test_oracle_parity import _canon_rows  # rootdir tests/ on sys.path
 
+from cs_5542_lab_6_spark.registry import all_oracles
 from cs_5542_lab_6_spark.streaming.batch_twins import (
     events_session_windows,
     events_tumbling_daily,
@@ -24,6 +26,19 @@ def test_stream_equals_batch_twin(spark, sf_dir):
     got = {tuple(r) for r in stream_tumbling_daily(spark, sf_dir).collect()}
     want = {tuple(r) for r in events_tumbling_daily(spark, sf_dir).collect()}
     assert got == want
+
+
+def test_memory_sink_runs_leave_no_temp_view(spark, sf_dir, oracle):
+    """Each run's memory-sink view is dropped once read (it would pin the
+    run's rows for the session's life); the returned rows stay intact."""
+    runs = [stream_tumbling_daily(spark, sf_dir) for _ in range(2)]
+    views = [t.name for t in spark.catalog.listTables() if t.isTemporary]
+    assert not [v for v in views if v.startswith("stream_tumbling_daily_")]
+    want = oracle.sql(all_oracles()["stream_tumbling_daily"])
+    for df in runs:
+        assert _canon_rows(df.columns, df.collect()) == _canon_rows(
+            want.columns, want.fetchall()
+        )
 
 
 def test_session_stream_equals_batch_twin(spark, sf_dir):
