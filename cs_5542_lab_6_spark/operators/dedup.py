@@ -102,12 +102,11 @@ def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cold: derived and cached — every consumer (sizes, signatures, both
     sides of the verify join) reuses one materialization; cache() is
     MEMORY_AND_DISK, so at scale it spills rather than OOMs."""
-    from ..pipeline.corpus import _warm_path, read_stage
+    from ..pipeline.corpus import _stage_or
 
-    p = _warm_path(sf_dir, "doc_shingles", spark)
-    if p:
-        return read_stage(spark, p)
-    return doc_shingles_build(spark, sf_dir).cache()
+    return _stage_or(
+        spark, sf_dir, "doc_shingles", lambda s, d: doc_shingles_build(s, d).cache()
+    )
 
 
 # DuckDB twin of _doc_shingles (distinct doc_id, xs).
@@ -151,12 +150,9 @@ def doc_minhash_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _doc_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, h0..h{n}) MinHash signatures: the ``doc_minhash``
     warehouse checkpoint when warm, the one-pass aggregation otherwise."""
-    from ..pipeline.corpus import _warm_path, read_stage
+    from ..pipeline.corpus import _stage_or
 
-    p = _warm_path(sf_dir, "doc_minhash", spark)
-    if p:
-        return read_stage(spark, p)
-    return doc_minhash_build(spark, sf_dir)
+    return _stage_or(spark, sf_dir, "doc_minhash", doc_minhash_build)
 
 
 # ---------------------------------------------------------------------------
@@ -846,12 +842,15 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair would have passed. ``dedup_lsh_bucket_audit``'s
     ``star_edges_failing_verify`` column counts exactly those exposure
     points (0 on every natural fixture — no capped buckets exist)."""
-    from ..pipeline.corpus import _warm_path, read_stage
+    from ..pipeline.corpus import _stage_or
 
-    p = _warm_path(sf_dir, "dedup_clusters", spark)
-    if p:
-        return read_stage(spark, p).orderBy("cluster_id")
-    return dedup_clusters_build(spark, sf_dir)
+    return _stage_or(
+        spark,
+        sf_dir,
+        "dedup_clusters",
+        dedup_clusters_build,
+        warm=lambda df: df.orderBy("cluster_id"),
+    )
 
 
 def dedup_clusters_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1027,12 +1026,11 @@ def _doc_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, simhash) signatures: the ``doc_simhash`` warehouse
     checkpoint when warm (a 16-byte-row parquet scan), the cold
     derivation cached otherwise (both sides of the band join reuse it)."""
-    from ..pipeline.corpus import _warm_path, read_stage
+    from ..pipeline.corpus import _stage_or
 
-    p = _warm_path(sf_dir, "doc_simhash", spark)
-    if p:
-        return read_stage(spark, p)
-    return doc_simhash_build(spark, sf_dir).cache()
+    return _stage_or(
+        spark, sf_dir, "doc_simhash", lambda s, d: doc_simhash_build(s, d).cache()
+    )
 
 
 @query(

@@ -567,18 +567,12 @@ def tfidf_keywords_for(
     Scale shape: df is a map-side-combinable aggregate over postings,
     the N scalar broadcasts, and the per-doc top-{TFIDF_TOP} is a
     window-group-limit over the postings scan — linear everywhere."""
-    from ..pipeline.corpus import _warm_path, read_stage
+    from ..pipeline.corpus import _stage_or
 
     if k < 1:
         raise ValueError(f"need k >= 1, got {k}")
-    post_p = _warm_path(sf_dir, "bm25_postings", spark)
-    dl_p = _warm_path(sf_dir, "bm25_doclen", spark)
-    if post_p and dl_p:
-        postings = read_stage(spark, post_p)
-        doclen = read_stage(spark, dl_p)
-    else:
-        postings = bm25_postings_build(spark, sf_dir)
-        doclen = bm25_doclen_build(spark, sf_dir)
+    postings = _stage_or(spark, sf_dir, "bm25_postings", bm25_postings_build)
+    doclen = _stage_or(spark, sf_dir, "bm25_doclen", bm25_doclen_build)
     n = doclen.agg(F.count("*").alias("n_docs"))
     df_ = postings.groupBy("token").agg(F.count("*").alias("df"))
     raw = F.col("tf") * F.log(

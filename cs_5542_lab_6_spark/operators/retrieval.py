@@ -206,15 +206,10 @@ def doc_substring_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is the plain full-scan strpos filter: candidate pruning must
     be output-invisible, exactly like the MinHash-banding dedup
     contract (operators/dedup.py)."""
-    from ..pipeline.corpus import _warm_path, read_stage
+    from ..pipeline.corpus import _stage_or
 
     grams = _pattern_trigrams(SUBSTR_PATTERN)
-    p = _warm_path(sf_dir, "trigram_postings", spark)
-    postings = (
-        read_stage(spark, p)
-        if p
-        else trigram_postings_build(spark, sf_dir)
-    )
+    postings = _stage_or(spark, sf_dir, "trigram_postings", trigram_postings_build)
     gset = spark.createDataFrame([(g,) for g in grams], "gram string")
     cand = (
         postings.filter(F.col("gram").isin(*grams))

@@ -80,27 +80,14 @@ def lsh_codes_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     the build-once/query-many vector-store shape (FAISS/SCaNN ingest
     side) 100 TB retrieval requires."""
     return (
-        load_table(spark, sf_dir, "embeddings")
-        .select(
-            "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
-        )
-        .withColumn("nrm", _norm(F.col("v")))
-        .withColumn("bucket", _spark_bucket(F.col("v")))
+        _coded_cold(spark, sf_dir)
         .repartition(F.col("bucket"))
         .sortWithinPartitions("bucket", "vec_id")
     )
 
 
-def _coded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, label, v, nrm, bucket) — the coded vector collection
-    every similarity query starts from. Warm: one scan of the
-    ``lsh_codes`` index stage (bucket-clustered, norm/code precomputed).
-    Cold: derived in the scan projection, identical values."""
-    from ..pipeline.corpus import _warm_path, read_stage
-
-    p = _warm_path(sf_dir, "lsh_codes", spark)
-    if p:
-        return read_stage(spark, p)
+def _coded_cold(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ``lsh_codes`` rows derived from the embeddings table, unclustered."""
     return (
         load_table(spark, sf_dir, "embeddings")
         .select(
@@ -109,6 +96,16 @@ def _coded(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("nrm", _norm(F.col("v")))
         .withColumn("bucket", _spark_bucket(F.col("v")))
     )
+
+
+def _coded(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, label, v, nrm, bucket) — the coded vector collection
+    every similarity query starts from. Warm: one scan of the
+    ``lsh_codes`` index stage (bucket-clustered, norm/code precomputed).
+    Cold: derived in the scan projection, identical values."""
+    from ..pipeline.corpus import _stage_or
+
+    return _stage_or(spark, sf_dir, "lsh_codes", _coded_cold)
 
 
 @query(
@@ -357,12 +354,9 @@ def ivf_centroids_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ivf_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(label, cv) centroids: the ``ivf_centroids`` warehouse checkpoint
     when warm, the corpus-wide aggregation otherwise."""
-    from ..pipeline.corpus import _warm_path, read_stage
+    from ..pipeline.corpus import _stage_or
 
-    p = _warm_path(sf_dir, "ivf_centroids", spark)
-    if p:
-        return read_stage(spark, p)
-    return ivf_centroids_build(spark, sf_dir)
+    return _stage_or(spark, sf_dir, "ivf_centroids", ivf_centroids_build)
 
 
 @query(
@@ -970,12 +964,9 @@ def kmeans_assign_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, cluster): the ``kmeans_assign`` checkpoint when warm, the
     Lloyd derivation (eagerly cut — K-row-bounded rounds) otherwise."""
-    from ..pipeline.corpus import _warm_path, read_stage
+    from ..pipeline.corpus import _stage_or
 
-    p = _warm_path(sf_dir, "kmeans_assign", spark)
-    if p:
-        return read_stage(spark, p)
-    return kmeans_assign_build(spark, sf_dir)  # already eagerly cut
+    return _stage_or(spark, sf_dir, "kmeans_assign", kmeans_assign_build)
 
 
 @query(
@@ -1198,12 +1189,6 @@ def contamination_semantic_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 MMR_QID = 0  # the query vector
 MMR_CAND = 10  # stage-one candidate pool (brute-force top-k)
 MMR_K = 5  # diversified result size; λ = 0.5 fixed in the formula
-# Pool size at which the pairwise-sims relation is eagerly checkpointed
-# instead of re-derived per argmax round (r16 advice): lazy re-derivation
-# is k·n² total pairwise work vs n² + one blocking materialization job —
-# the job wins below a few hundred candidates (measured at n=10: lazy
-# ~8% faster), the n² term wins far above it. Results identical.
-MMR_SIMS_CHECKPOINT_MIN = 512
 
 
 def _mmr_round_sql(i: int) -> str:
@@ -1352,23 +1337,11 @@ def mmr_topk_for(
     )
     a = rel.select(F.col("vec_id").alias("a_id"), F.col("v").alias("av"), F.col("nrm").alias("an"))
     b = rel.select(F.col("vec_id").alias("b_id"), F.col("v").alias("bv"), F.col("nrm").alias("bn"))
-    # lazy below MMR_SIMS_CHECKPOINT_MIN candidates (r16+r17 advice):
-    # ``rel`` above is already an eager checkpoint, so this n_cand²
-    # self-join is a trivial plan over an in-memory RDD scan —
-    # re-deriving it per argmax round costs less than the extra blocking
-    # materialization job the old eager checkpoint paid (back-to-back
-    # A/B at sf0.1: ~8% faster min, 2.28 vs 2.47 on a loaded host). But
-    # lazy re-derivation makes total pairwise work k·n² instead of n²
-    # once, which inverts past a pool-size threshold — so large pools
-    # (where the quadratic dominates the one checkpoint job) keep the
-    # eager cut. Results are unaffected either way.
     sims = a.join(b, F.col("a_id") != F.col("b_id")).select(
         "a_id",
         "b_id",
         _cos(F.col("av"), F.col("bv"), F.col("an"), F.col("bn")).alias("sim"),
     )
-    if n_cand >= MMR_SIMS_CHECKPOINT_MIN:
-        sims = sims.localCheckpoint(eager=True)
     cand = rel.select("vec_id", "rel")
     first = cand.orderBy(F.desc("rel"), F.asc("vec_id")).limit(1).select(
         F.lit(1).alias("rank"),
@@ -1775,12 +1748,9 @@ def _pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     warm, the full encode otherwise — codes are a pure function of the
     vectors and the deterministic anchors, so both paths are
     row-identical."""
-    from ..pipeline.corpus import _warm_path, read_stage
+    from ..pipeline.corpus import _stage_or
 
-    p = _warm_path(sf_dir, "pq_codes", spark)
-    if p:
-        return read_stage(spark, p)
-    return pq_codes_build(spark, sf_dir)
+    return _stage_or(spark, sf_dir, "pq_codes", pq_codes_build)
 
 
 # --- trained PQ codebook (per-subspace Lloyd, exact-integer arithmetic) ----
@@ -1909,12 +1879,9 @@ def pq_codebook_train_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pq_codebook_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(m, j, c): the ``pq_codebook`` warehouse checkpoint when warm, the
     per-subspace Lloyd training otherwise — deterministic either way."""
-    from ..pipeline.corpus import _warm_path, read_stage
+    from ..pipeline.corpus import _stage_or
 
-    p = _warm_path(sf_dir, "pq_codebook", spark)
-    if p:
-        return read_stage(spark, p)
-    return pq_codebook_train_build(spark, sf_dir)
+    return _stage_or(spark, sf_dir, "pq_codebook", pq_codebook_train_build)
 
 
 def pq_codes_trained_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1930,12 +1897,9 @@ def pq_codes_trained_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pq_codes_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, label, m, j) under the trained codebook: warm stage scan
     or the full re-encode."""
-    from ..pipeline.corpus import _warm_path, read_stage
+    from ..pipeline.corpus import _stage_or
 
-    p = _warm_path(sf_dir, "pq_codes_trained", spark)
-    if p:
-        return read_stage(spark, p)
-    return pq_codes_trained_build(spark, sf_dir)
+    return _stage_or(spark, sf_dir, "pq_codes_trained", pq_codes_trained_build)
 
 
 def _duck_trained_codebook_ctes() -> str:

@@ -951,10 +951,9 @@ def _lm_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(w1, w2, c2, c1, v): the materialized ``lm_counts`` checkpoint
     when warm (a pure parquet scan), the cold derivation otherwise —
     row-identical either way."""
-    from ..pipeline.corpus import _warm_path, read_stage
+    from ..pipeline.corpus import _stage_or
 
-    p = _warm_path(sf_dir, "lm_counts", spark)
-    return read_stage(spark, p) if p else lm_counts_build(spark, sf_dir)
+    return _stage_or(spark, sf_dir, "lm_counts", lm_counts_build)
 
 
 @query(
@@ -1347,19 +1346,13 @@ def _bpe_rounds_local(
 BPE_LOCAL_VOCAB_MAX = 500_000
 
 
-def _bpe_local_max() -> int:
-    import os
-
-    return int(os.environ.get("SPARK_GRAFT_BPE_LOCAL_MAX", BPE_LOCAL_VOCAB_MAX))
-
-
 def _bpe_iterate(spark: SparkSession, sf_dir: str, rounds: int):
     """Run ``rounds`` greedy merge rounds; returns (merge list, the
     FINAL cached (syms, cnt) vocabulary — caller must unpersist).
 
     Scale: the first hash-agg is corpus-sized and always distributed;
     every later round is vocabulary-sized. When the vocabulary fits
-    ``_bpe_local_max()`` rows it is collected ONCE and the rounds finish
+    ``BPE_LOCAL_VOCAB_MAX`` rows it is collected ONCE and the rounds finish
     driver-local (zero further Spark jobs); otherwise each round is one
     explode + map-side-combinable agg + a 1-row argmax collect."""
     docs = load_table(spark, sf_dir, "documents")
@@ -1372,7 +1365,7 @@ def _bpe_iterate(spark: SparkSession, sf_dir: str, rounds: int):
     )
     merges: list[tuple[int, str, str, str, int]] = []
     n_vocab = vocab.count()  # also materializes the cache for both paths
-    if n_vocab <= _bpe_local_max():
+    if n_vocab <= BPE_LOCAL_VOCAB_MAX:
         rows = [(list(r["syms"]), int(r["cnt"])) for r in vocab.collect()]
         vocab.unpersist()
         merges, final_rows = _bpe_rounds_local(rows, rounds)
@@ -1881,10 +1874,9 @@ def _winnow_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_grams, sels, fps): the materialized ``winnow_fps``
     checkpoint when warm (a pure parquet scan), the cold derivation
     otherwise — row-identical either way."""
-    from ..pipeline.corpus import _warm_path, read_stage
+    from ..pipeline.corpus import _stage_or
 
-    p = _warm_path(sf_dir, "winnow_fps", spark)
-    return read_stage(spark, p) if p else winnow_fps_build(spark, sf_dir)
+    return _stage_or(spark, sf_dir, "winnow_fps", winnow_fps_build)
 
 
 @query(

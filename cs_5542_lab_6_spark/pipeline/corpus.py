@@ -33,6 +33,7 @@ Scale notes (100 TB design point):
 from __future__ import annotations
 
 import os
+import re
 import threading
 from typing import Callable
 
@@ -416,17 +417,65 @@ def _warm_path(
     return path if os.path.exists(marker) else None
 
 
-# Session-level stage-schema memo (r17, guide §6 file-listing/metadata
-# discipline): a bare ``spark.read.parquet(path)`` runs a driver-side
-# footer-read job PER CALL to infer the schema (~90 ms each on this VM;
-# the query layer does 1-6 warm reads per query, so the inference tax was
-# a measurable slice of every sub-second query). The engine WROTE these
-# stages, so their schemas are deterministic — this memo is the catalog a
-# real 100 TB deployment reads schemas from (tables there are catalog
-# entries, never schema-inferred per query). Keyed on the _SUCCESS commit
-# (``_commit``) so a rebuilt stage re-infers exactly once; NO data or
-# results are cached — every query still scans the parquet files in full.
-_STAGE_SCHEMAS: dict[str, tuple[tuple[int, int], object]] = {}
+# Declared stage schemas: the engine writes every warehouse stage, so it
+# knows each one's columns and types, and reads them from here the way a
+# catalog serves table schemas — a bare ``spark.read.parquet(path)``
+# would infer them with a footer-read job on every read. ``build_corpus``
+# checks each builder's output against its declaration before writing;
+# ``read_stage`` checks a data file's footer for every declared column
+# (Spark's scan reads a missing column as NULLs; a changed type already
+# fails the scan, naming the column and the file). Columns are in the
+# builder's order, which ``read_stage`` restores for a partitioned stage
+# (Spark's scan lists partition columns last).
+STAGE_SCHEMAS: dict[str, str] = {
+    "papers": "paper_id STRING, title STRING, authors STRING, abstract STRING, "
+    "publication_year INT, source STRING, source_url STRING, categories STRING, "
+    "ingested_at TIMESTAMP",
+    "chunks": "chunk_id STRING, paper_id STRING, chunk_index INT, section_name STRING, "
+    "text_content STRING, word_count INT, ingested_at TIMESTAMP, embedding ARRAY<FLOAT>",
+    "kg_nodes": "node_id STRING, label STRING, name STRING, name_normalized STRING, "
+    "paper_count BIGINT",
+    "kg_edges": "edge_id STRING, source_node_id STRING, target_node_id STRING, "
+    "relation_type STRING, paper_id STRING, weight DOUBLE, ingested_at TIMESTAMP",
+    "kg_map": "map_id STRING, chunk_id STRING, node_id STRING, confidence DOUBLE",
+    "doc_shingles": "doc_id BIGINT, xs BIGINT",
+    # h0..h15: one minimum per dedup.MINHASH_PERMS permutation
+    "doc_minhash": "doc_id BIGINT, " + ", ".join(f"h{i} BIGINT" for i in range(16)),
+    "doc_simhash": "doc_id BIGINT, simhash BIGINT",
+    "dedup_clusters": "cluster_id BIGINT, n_members BIGINT, member_ids STRING",
+    "ivf_centroids": "label INT, cv ARRAY<DOUBLE>",
+    "lsh_codes": "vec_id BIGINT, label INT, v ARRAY<DOUBLE>, nrm DOUBLE, bucket INT",
+    "pq_codes": "vec_id BIGINT, label INT, m INT, j INT",
+    "pq_codebook": "m INT, j INT, c ARRAY<DOUBLE>",
+    "pq_codes_trained": "vec_id BIGINT, label INT, m INT, j INT",
+    "kmeans_assign": "vec_id BIGINT, cluster INT",
+    "bm25_postings": "token STRING, doc_id BIGINT, tf BIGINT",
+    "bm25_doclen": "doc_id BIGINT, dl BIGINT",
+    "trigram_postings": "doc_id BIGINT, gram STRING",
+    "winnow_fps": "doc_id BIGINT, n_grams BIGINT, sels ARRAY<BIGINT>, fps ARRAY<BIGINT>",
+    "lm_counts": "w1 STRING, w2 STRING, c2 BIGINT, c1 BIGINT, v BIGINT",
+}
+
+
+def declared_columns(stage: str) -> list[str]:
+    """The column names of ``stage``'s declaration, in order."""
+    flat = STAGE_SCHEMAS[stage]
+    while "<" in flat:  # drop type parameters, which may hold commas
+        flat = re.sub(r"<[^<>]*>", "", flat)
+    return [c.split()[0] for c in flat.split(",")]
+
+
+def _first_data_file(path: str) -> tuple[str, set[str]] | None:
+    """A stage's first data file and the partition columns named by its
+    directories (``col=value``), or None when it holds no data file."""
+    for d, dirs, names in os.walk(path):
+        dirs.sort()
+        files = sorted(n for n in names if not n.startswith(("_", ".")))
+        if files:
+            rel = os.path.relpath(d, path)
+            parts = set() if rel == "." else {s.split("=")[0] for s in rel.split(os.sep)}
+            return os.path.join(d, files[0]), parts
+    return None
 
 
 def _commit(path: str) -> tuple[int, int] | None:
@@ -442,20 +491,26 @@ def _commit(path: str) -> tuple[int, int] | None:
 
 
 def read_stage(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet scan of a committed warehouse stage, schema served from
-    the session catalog memo (inferred once per commit, see above)."""
-    if os.environ.get("SPARK_GRAFT_SCHEMA_MEMO", "1") == "0":
-        return spark.read.parquet(path)  # measurement/debug kill-switch
-    commit = _commit(path)
-    if commit is None:
-        # remote URI or glob: no local marker to key on — infer as before
-        return spark.read.parquet(path)
-    hit = _STAGE_SCHEMAS.get(path)
-    if hit is not None and hit[0] == commit:
-        return spark.read.schema(hit[1]).parquet(path)
-    df = spark.read.parquet(path)
-    _STAGE_SCHEMAS[path] = (commit, df.schema)
-    return df
+    """Parquet scan of a committed warehouse stage under its declared
+    schema (``STAGE_SCHEMAS``, looked up by the directory name), in the
+    declared column order; no schema-inference job runs. A local stage
+    whose data file lacks a declared column raises ``ValueError`` naming
+    the stage, the column and the file; remote URIs are read unchecked."""
+    stage = os.path.basename(path.rstrip("/"))
+    cols = declared_columns(stage)
+    found = None if "://" in path else _first_data_file(path)
+    if found is not None:
+        import pyarrow.parquet as pq
+
+        file, parts = found
+        have = set(pq.read_schema(file).names) | parts
+        missing = [c for c in cols if c not in have]
+        if missing:
+            raise ValueError(
+                f"warehouse stage {stage!r}: declared column {missing[0]!r} "
+                f"is missing from {file}"
+            )
+    return spark.read.schema(STAGE_SCHEMAS[stage]).parquet(path).select(*cols)
 
 
 # (session, stage paths) -> (their commits, the cached relations); the
@@ -502,13 +557,14 @@ def warm_cached(
 
 
 def _stage_or(
-    spark: SparkSession, sf_dir: str, stage: str, builder
+    spark: SparkSession, sf_dir: str, stage: str, builder, warm=lambda df: df
 ) -> DataFrame:
     """The materialized warehouse checkpoint for ``stage`` when warm (a
-    pure parquet scan), the cold builder otherwise — row-for-row the same
-    relation (asserted in tests/test_ingest.py)."""
+    pure parquet scan, passed through ``warm``), the cold builder
+    otherwise — row-for-row the same relation (asserted in
+    tests/test_ingest.py)."""
     p = _warm_path(sf_dir, stage, spark)
-    return read_stage(spark, p) if p else builder(spark, sf_dir)
+    return warm(read_stage(spark, p)) if p else builder(spark, sf_dir)
 
 
 def chunks_source(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -516,37 +572,15 @@ def chunks_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint when warm (a pure parquet scan — column pruning drops
     text_content when only embeddings are scored), the stage-2+3 derivation
     otherwise."""
-    p = _warm_path(sf_dir, "chunks", spark)
-    if p:
-        return read_stage(spark, p)
-    return chunks_with_embeddings_df(spark, sf_dir)
-
-
-# papers_build's column order: the warm stage is hive-partitioned by
-# publication_year, so its scan lists that column last.
-PAPERS_COLUMNS = (
-    "paper_id",
-    "title",
-    "authors",
-    "abstract",
-    "publication_year",
-    "source",
-    "source_url",
-    "categories",
-    "ingested_at",
-)
+    return _stage_or(spark, sf_dir, "chunks", chunks_with_embeddings_df)
 
 
 def papers_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The papers table for the serving layer (get_paper_details, GET
-    /papers): the ``papers`` checkpoint in papers_build's column order
-    from the serving cache when warm, papers_build otherwise."""
+    /papers): the ``papers`` checkpoint from the serving cache when warm,
+    papers_build otherwise."""
     return warm_cached(
-        spark,
-        sf_dir,
-        ("papers",),
-        lambda papers: papers.select(*PAPERS_COLUMNS),
-        lambda: papers_build(spark, sf_dir),
+        spark, sf_dir, ("papers",), lambda papers: papers, lambda: papers_build(spark, sf_dir)
     )
 
 
@@ -996,12 +1030,7 @@ def kg_edges_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     completing on executor-thread memory."""
     from ..functions.ner import extract_mentions_udf, ner_active
 
-    p = _warm_path(sf_dir, "chunks", spark)
-    chunks = (
-        read_stage(spark, p).select("paper_id", "text_content")
-        if p
-        else _chunk_documents(spark, sf_dir)
-    )
+    chunks = _stage_or(spark, sf_dir, "chunks", _chunk_documents)
     mentions = (
         extract_mentions_udf("text_content")
         if ner_active()

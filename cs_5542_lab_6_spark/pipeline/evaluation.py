@@ -36,8 +36,7 @@ from .corpus import (
     KG_MIN_NAME_LENGTH,
     _kg_relations,
     _kg_und_occurrences,
-    _warm_path,
-    read_stage,
+    _stage_or,
     chunk_entities_df,
     chunks_source,
 )
@@ -241,15 +240,12 @@ def eval_rag_comparison(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    pm = _warm_path(sf_dir, "kg_map", spark)
     # no .distinct(): (chunk_id, node_id) is UNIQUE by construction in
     # both sources (chunk_entities_df's per-chunk first-seen dedup is
     # what kg_map materializes), so deduping here was a pure extra
     # shuffle of the bridge relation — the r11 plan audit removed it.
-    bridge = (
-        read_stage(spark, pm).select("chunk_id", "node_id")
-        if pm
-        else chunk_entities_df(spark, sf_dir).select("chunk_id", "node_id")
+    bridge = _stage_or(spark, sf_dir, "kg_map", chunk_entities_df).select(
+        "chunk_id", "node_id"
     )
     gw = W.partitionBy("qid").orderBy(F.desc("n_matched"), F.asc("chunk_id"))
     gtop = (

@@ -28,6 +28,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..operators.dedup import (
     dedup_clusters_build,
@@ -47,11 +48,13 @@ from ..operators.similarity import (
     pq_codes_trained_build,
 )
 from .corpus import (
+    STAGE_SCHEMAS,
     chunks_with_embeddings_df,
     kg_edges_build,
     kg_map_build,
     kg_nodes_build,
     papers_build,
+    read_stage,
 )
 
 # (name, builder, partition columns) in FK dependency order
@@ -99,8 +102,24 @@ def checkpoint_path(out_dir: str, name: str) -> str:
 
 
 def load_checkpoint(spark: SparkSession, out_dir: str, name: str) -> DataFrame:
-    """S3 resume read: a checkpointed stage is just a parquet scan."""
-    return spark.read.parquet(checkpoint_path(out_dir, name))
+    """S3 resume read: a checkpointed stage is a parquet scan under its
+    declared schema."""
+    return read_stage(spark, checkpoint_path(out_dir, name))
+
+
+def _check_declared(name: str, df: DataFrame) -> None:
+    """Raise when a builder's output differs from the stage's declared
+    schema (``corpus.STAGE_SCHEMAS``) in a column's name or type;
+    nullability is not compared."""
+    declared = StructType.fromDDL(STAGE_SCHEMAS[name])
+    want = {f.name: f.dataType.simpleString() for f in declared}
+    got = {f.name: f.dataType.simpleString() for f in df.schema}
+    col = next((c for c in {**want, **got} if want.get(c) != got.get(c)), None)
+    if col is not None:
+        raise ValueError(
+            f"stage {name!r} does not match its declared schema at column {col!r}: "
+            f"built {got.get(col, 'nothing')}, declared {want.get(col, 'nothing')}"
+        )
 
 
 # Stage dependency DAG: a stage lists the stages whose WAREHOUSE
@@ -120,6 +139,15 @@ STAGE_DEPS: dict[str, tuple[str, ...]] = {
     "dedup_clusters": ("doc_minhash", "doc_shingles"),
     "pq_codes_trained": ("pq_codebook",),
 }
+
+
+# Stage builds in flight at once. Most stages are a few short jobs, so
+# threads beyond the core count still overlap one stage's driver-side
+# planning with another's tasks. On 4 cores the full 20-stage sf0.001
+# build took a median 22.6 s with 8 threads and 24.0 s with 4 (4
+# interleaved pairs, each side faster in 2: within noise); on 32 cores
+# 8 threads cut it from 59 s sequential to about 22 s at sf0.1.
+BUILD_PARALLEL = 8
 
 
 def _build_stage(
@@ -167,6 +195,7 @@ def _build_stage_in_pool(
     observed: dict[str, object] = {}
     if not skipped:
         df = builder(spark, sf_dir)
+        _check_declared(name, df)
         # in-flight data-quality metrics via the Observation API:
         # collected DURING the write pass (zero extra jobs), the
         # production pattern for per-stage telemetry — row count,
@@ -195,7 +224,7 @@ def _build_stage_in_pool(
         observed = dict(obs.get)
     # the receipt row count always reads what is ON DISK (S9
     # semantics) — the observed count cross-checks it
-    n = spark.read.parquet(path).count()
+    n = read_stage(spark, path).count()
     return {
         "rows": n,
         "status": "OK" if n > 0 else "EMPTY",
@@ -221,21 +250,20 @@ def build_corpus(
     report: per-table row count + OK/EMPTY status + skip flag.
 
     Stages run as a DEPENDENCY DAG (``STAGE_DEPS``), up to
-    ``max_parallel`` at a time (default 8, measured best on local[32] —
-    59s sequential → ~22s at sf0.1; 1 = the old sequential build). Concurrent Spark jobs from driver threads are the standard
-    way to keep a cluster busy when individual stages can't saturate it
-    — at 100 TB the independent stage families (KG extraction, dedup
-    signatures, vector indexes, text indexes) have no reason to idle
-    behind each other, and the scheduler interleaves their tasks.
+    ``max_parallel`` at a time (default ``BUILD_PARALLEL``; 1 = the
+    sequential build). Concurrent Spark jobs from driver threads are the
+    standard way to keep a cluster busy when individual stages can't
+    saturate it — at 100 TB the independent stage families (KG
+    extraction, dedup signatures, vector indexes, text indexes) have no
+    reason to idle behind each other, and the scheduler interleaves
+    their tasks.
     Per-stage results and the report are identical to the sequential
     build (each stage writes its own checkpoint; dependents start only
     after the upstream _SUCCESS marker lands)."""
     from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 
     if max_parallel is None:
-        # env override for ops tuning (CLI `build` has no flag for it);
-        # 1 degrades to the sequential build
-        max_parallel = int(os.environ.get("SPARK_GRAFT_BUILD_PARALLEL", "8"))
+        max_parallel = BUILD_PARALLEL
     order = [name for name, _, _ in STAGES]
     stages = {name: (builder, parts) for name, builder, parts in STAGES}
     report: dict[str, dict[str, object]] = {}

@@ -72,7 +72,7 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    pretouch: bool | None = None,
+    pretouch: bool = False,
 ) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
@@ -134,8 +134,6 @@ def get_spark(
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
         .config("spark.driver.memory", driver_mem)
     )
-    if pretouch is None:
-        pretouch = os.environ.get("SPARK_GRAFT_PRETOUCH", "0") != "0"
     if pretouch:
         # Pre-commit + pre-fault the whole heap at JVM start (-Xms=-Xmx +
         # AlwaysPreTouch): this VM intermittently backs ANONYMOUS pages
@@ -149,14 +147,11 @@ def get_spark(
         # driver-observed number; on a healthy host it costs seconds.
         # Applies only at JVM creation (getOrCreate reuse ignores it);
         # one JVM per process, so each process pays it at most once.
-        # OPT-IN (pretouch=True param, or $SPARK_GRAFT_PRETOUCH=1 for CLI
-        # processes like bench.py that own their whole environment): on a
-        # degraded window a 24g pre-fault took 130-214s, which is fine
+        # OPT-IN (bench.py and the test fixture pass pretouch=True): on
+        # a degraded window a 24g pre-fault took 130-214s, which is fine
         # for a process that owns its startup but a timeout risk inside
         # any harness that bounds session creation (e.g. a driver smoke
-        # check, or a CLI subprocess spawned under a test timeout — the
-        # param form exists precisely so the test fixture can opt in
-        # WITHOUT exporting the env var to its subprocesses).
+        # check, or a CLI subprocess spawned under a test timeout).
         # MERGE with any caller-supplied extraJavaOptions rather than
         # last-write-wins: a caller passing their own JVM flags must not
         # silently discard the pre-touch (or vice versa). Caller flags

@@ -76,18 +76,19 @@ def _stream_state_partitions(spark: SparkSession, sf_dir: str) -> int | None:
     {STREAM_STATE_TARGET_BYTES} of bounded source, clamped to
     [1, session shuffle partitions] — locally that is 1-2 partitions; at
     scale the clamp lands on the cluster-sized session value.
-    $SPARK_GRAFT_STREAM_STATE_PARTS overrides both (unbounded production
-    sources have no file size; their width is a capacity decision).
     Results are invariant to the width — the aggregations/dedup/join
     semantics are partition-count independent (oracle-pinned), only the
     per-trigger fixed cost changes."""
-    env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTS")
-    if env:
-        return max(1, int(env))
     try:
         nbytes = os.path.getsize(os.path.join(sf_dir, "events.parquet"))
     except OSError:
         return None
+    return _width_for(spark, nbytes)
+
+
+def _width_for(spark: SparkSession, nbytes: int) -> int:
+    """One partition per STREAM_STATE_TARGET_BYTES of ``nbytes``,
+    clamped to [1, the session's shuffle partitions]."""
     session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     return max(1, min(session_parts, -(-nbytes // STREAM_STATE_TARGET_BYTES)))
 
@@ -127,12 +128,11 @@ class _shuffle_width:
 
     def __init__(self, spark: SparkSession, *paths: str) -> None:
         self.spark = spark
-        session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
         nbytes = _dir_bytes(*paths)
         self.width = (
-            max(1, min(session_parts, -(-nbytes // STREAM_STATE_TARGET_BYTES)))
+            _width_for(spark, nbytes)
             if nbytes
-            else session_parts
+            else int(spark.conf.get("spark.sql.shuffle.partitions"))
         )
 
     def __enter__(self) -> "_shuffle_width":
@@ -1038,15 +1038,7 @@ def dedup_admission_stream_run(
 
         wp = _warm_path(sf_dir, "doc_shingles", spark)
         if wp and "://" not in wp:
-            nbytes = _dir_bytes(wp)
-            session_parts = int(
-                spark.conf.get("spark.sql.shuffle.partitions")
-            )
-            width = max(
-                1,
-                min(session_parts, -(-nbytes // STREAM_STATE_TARGET_BYTES)),
-            )
-            idx = idx.coalesce(width)
+            idx = idx.coalesce(_width_for(spark, _dir_bytes(wp)))
         idx.write.mode("overwrite").parquet(index_dir)
         spark.read.parquet(index_dir).groupBy("doc_id").agg(
             F.count("*").alias("n")

@@ -85,6 +85,31 @@ def test_build_checkpoint_resume_verify(spark, sf_dir, tmp_path):
     assert set(verify_corpus(spark, out).values()) == {0}
 
 
+def test_every_stage_declares_its_schema():
+    from cs_5542_lab_6_spark.pipeline.corpus import STAGE_SCHEMAS
+    from cs_5542_lab_6_spark.pipeline.ingest import STAGES
+
+    assert set(STAGE_SCHEMAS) == {name for name, _, _ in STAGES}
+
+
+def test_build_rejects_a_builder_that_drifts_from_its_declaration(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A builder whose output no longer matches its stage's declared
+    schema fails the build before anything is written, naming the stage
+    and the column."""
+    from cs_5542_lab_6_spark.pipeline import ingest as I
+
+    def drifted(spark, sf_dir):
+        return papers_build(spark, sf_dir).withColumn("title", F.length("title"))
+
+    monkeypatch.setattr(I, "STAGES", (("papers", drifted, ("publication_year",)),))
+    out = tmp_path / "wh"
+    with pytest.raises(ValueError, match=r"'papers'.*'title'"):
+        build_corpus(spark, sf_dir, str(out), resume=False)
+    assert not (out / "papers").exists()
+
+
 @pytest.mark.slow
 def test_warm_warehouse_queries_equal_cold(spark, sf_dir, tmp_path, monkeypatch):
     """The query layer served from materialized checkpoints must be

@@ -263,8 +263,8 @@ def test_warm_papers_refresh_on_stage_recommit(spark, sf_dir, tmp_path, monkeypa
     the warm ``papers`` stage in place (new files, a changed title, an
     extra column, a new _SUCCESS), and the next request serves the new
     row. The old commit's cached relation is unpersisted, the stage
-    schema is inferred again, and answers stay correct after
-    ``clear_caches``."""
+    still reads under its declared columns (the extra one is not part
+    of the stage), and answers stay correct after ``clear_caches``."""
     from cs_5542_lab_6_spark.pipeline import corpus as C
     from cs_5542_lab_6_spark.pipeline import ingest as I
     from cs_5542_lab_6_spark.session import clear_caches
@@ -302,7 +302,7 @@ def test_warm_papers_refresh_on_stage_recommit(spark, sf_dir, tmp_path, monkeypa
     assert got["doc_1"] == "Rewritten 1"
     assert got["doc_2"] == "Document 2"
     assert not first_commit & persisted(), "the old commit is still cached"
-    assert "rewritten_by" in C.read_stage(spark, str(stage)).columns
+    assert C.read_stage(spark, str(stage)).columns == C.declared_columns("papers")
 
     clear_caches(spark)
     assert titles()["doc_1"] == "Rewritten 1"
@@ -339,3 +339,75 @@ def test_warm_entities_refresh_on_chunks_recommit(spark, sf_dir, tmp_path, monke
 
     assert nodes_of(chunk_id) == {"node_zyzzyva"}
     clear_caches(spark)
+
+
+@pytest.fixture(scope="module")
+def built_papers(spark, sf_dir, tmp_path_factory):
+    """A committed warm ``papers`` stage, built once; tests copy it."""
+    from cs_5542_lab_6_spark.pipeline import ingest as I
+
+    out = tmp_path_factory.mktemp("papers_wh")
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(I, "STAGES", tuple(s for s in I.STAGES if s[0] == "papers"))
+        I.build_corpus(spark, sf_dir, str(out), resume=False)
+    return out / "papers"
+
+
+def _copy_stage(src, tmp_path):
+    import shutil
+
+    stage = tmp_path / "wh" / "papers"
+    shutil.copytree(src, stage)
+    return stage
+
+
+def test_read_stage_runs_no_job(spark, built_papers, tmp_path):
+    """The first read of a freshly committed stage runs no Spark job:
+    its schema is declared, not inferred from parquet footers."""
+    from cs_5542_lab_6_spark.pipeline import corpus as C
+
+    stage = _copy_stage(built_papers, tmp_path)
+    sc = spark.sparkContext
+    sc.setJobGroup("read_stage_jobs", "read_stage_jobs")
+    try:
+        df = C.read_stage(spark, str(stage))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("read_stage_jobs") == []
+    assert df.columns == C.declared_columns("papers")
+
+
+def test_read_stage_names_a_dropped_column(spark, built_papers, tmp_path):
+    """Another writer drops ``title`` from the committed stage: the next
+    warm read fails naming the stage and the column, instead of reading
+    the column as NULLs."""
+    from cs_5542_lab_6_spark.pipeline import corpus as C
+
+    stage = _copy_stage(built_papers, tmp_path)
+    _recommit_stage(stage, lambda t: t.drop(["title"]).replace_schema_metadata(None))
+    with pytest.raises(ValueError, match=r"'papers'.*'title'"):
+        C.read_stage(spark, str(stage))
+
+
+def test_read_stage_names_a_changed_type(spark, built_papers, tmp_path):
+    """Another writer changes ``title`` to an integer: the warm read
+    fails, and the error names the column and the stage's files."""
+    import pyarrow as pa
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import PySparkException
+
+    from cs_5542_lab_6_spark.pipeline import corpus as C
+
+    stage = _copy_stage(built_papers, tmp_path)
+    _recommit_stage(
+        stage,
+        lambda t: t.set_column(
+            t.schema.get_field_index("title"),
+            "title",
+            pa.array(range(t.num_rows), pa.int32()),
+        ).replace_schema_metadata(None),
+    )
+    with pytest.raises((PySparkException, Py4JJavaError)) as err:
+        C.read_stage(spark, str(stage)).collect()
+    assert "title" in str(err.value)
+    assert str(stage) in str(err.value)

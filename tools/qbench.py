@@ -5,7 +5,7 @@ Mirrors bench.py methodology (warm warehouse, noop sink, clear_caches
 between runs) on an arbitrary subset of queries:
 
     python tools/qbench.py --runs 3 q1 q2 ...          # time queries
-    python tools/qbench.py --plan-dir plans/r16 --suffix before q1 ...
+    python tools/qbench.py --plan-dir /tmp/plans --suffix before q1 ...
                                                        # dump explain()
 
 Intended for the inner optimization loop only; bench.py remains the
