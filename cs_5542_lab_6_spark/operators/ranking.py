@@ -150,8 +150,8 @@ def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     asserted in tests/test_ingest.py). Cold: the full derivation."""
     from ..pipeline.corpus import _warm_path, read_stage
 
-    post_p = _warm_path(sf_dir, "bm25_postings", spark)
-    dl_p = _warm_path(sf_dir, "bm25_doclen", spark)
+    post_p = _warm_path(sf_dir, "bm25_postings")
+    dl_p = _warm_path(sf_dir, "bm25_doclen")
     if post_p and dl_p:
         qterms = spark.createDataFrame(
             [(t,) for t in sorted(set(BM25_QUERY_TERMS))], "term string"

@@ -387,34 +387,24 @@ WAREHOUSE_ENV = "SPARK_GRAFT_WAREHOUSE"
 
 
 def warehouse_dir(sf_dir: str) -> str | None:
+    """The warm warehouse for ``sf_dir`` under $SPARK_GRAFT_WAREHOUSE, or
+    None when it is unset. The warehouse is a local directory: a value
+    with a URI scheme raises rather than silently serving cold."""
     root = os.environ.get(WAREHOUSE_ENV)
     if not root:
         return None
+    if "://" in root:
+        raise ValueError(f"{WAREHOUSE_ENV}={root!r}: the warehouse must be a local directory")
     return os.path.join(root, os.path.basename(sf_dir.rstrip("/")))
 
 
-def _warm_path(
-    sf_dir: str, stage: str, spark: SparkSession | None = None
-) -> str | None:
-    """Checkpoint dir for a stage iff complete (_SUCCESS), else None.
-
-    Local paths check os.path; a warehouse URI with a scheme (hdfs://,
-    s3a://) resolves through the Hadoop FileSystem API so a remote
-    warehouse is honored — pass ``spark`` for that case (without it a
-    remote URI conservatively reports cold)."""
+def _warm_path(sf_dir: str, stage: str) -> str | None:
+    """Checkpoint dir for a stage iff complete (_SUCCESS), else None."""
     base = warehouse_dir(sf_dir)
     if not base:
         return None
     path = os.path.join(base, stage)
-    marker = os.path.join(path, "_SUCCESS")
-    if "://" in base:
-        if spark is None:
-            return None
-        jvm = spark.sparkContext._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(marker)
-        fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-        return path if fs.exists(hpath) else None
-    return path if os.path.exists(marker) else None
+    return path if os.path.exists(os.path.join(path, "_SUCCESS")) else None
 
 
 # Declared stage schemas: the engine writes every warehouse stage, so it
@@ -481,8 +471,8 @@ def _first_data_file(path: str) -> tuple[str, set[str]] | None:
 def _commit(path: str) -> tuple[int, int] | None:
     """A stage's commit identity: its _SUCCESS marker's (inode, mtime in
     ns). Every commit writes a new marker, so a rebuild changes it even
-    within one mtime tick. None when there is no local marker (remote
-    URI)."""
+    within one mtime tick. None when the marker is gone (a recommit in
+    progress)."""
     try:
         st = os.stat(os.path.join(path, "_SUCCESS"))
     except OSError:
@@ -493,12 +483,12 @@ def _commit(path: str) -> tuple[int, int] | None:
 def read_stage(spark: SparkSession, path: str) -> DataFrame:
     """Parquet scan of a committed warehouse stage under its declared
     schema (``STAGE_SCHEMAS``, looked up by the directory name), in the
-    declared column order; no schema-inference job runs. A local stage
-    whose data file lacks a declared column raises ``ValueError`` naming
-    the stage, the column and the file; remote URIs are read unchecked."""
+    declared column order; no schema-inference job runs. A stage whose
+    data file lacks a declared column raises ``ValueError`` naming
+    the stage, the column and the file."""
     stage = os.path.basename(path.rstrip("/"))
     cols = declared_columns(stage)
-    found = None if "://" in path else _first_data_file(path)
+    found = _first_data_file(path)
     if found is not None:
         import pyarrow.parquet as pq
 
@@ -530,9 +520,9 @@ def warm_cached(
     the warm ``stages`` (one ``read_stage`` each, in order), cached and
     reused until a stage's commit changes; ``cold()`` uncached when any
     stage is cold. ``derive`` may return one relation or a tuple; each
-    is cached. Stages without a local commit marker (remote URIs) are
-    served uncached."""
-    paths = tuple(_warm_path(sf_dir, st, spark) for st in stages)
+    is cached. A stage whose marker vanished after the check (a recommit
+    in progress) is served uncached."""
+    paths = tuple(_warm_path(sf_dir, st) for st in stages)
     if not all(paths):
         return cold()
     commits = tuple(_commit(p) for p in paths)
@@ -563,7 +553,7 @@ def _stage_or(
     pure parquet scan, passed through ``warm``), the cold builder
     otherwise — row-for-row the same relation (asserted in
     tests/test_ingest.py)."""
-    p = _warm_path(sf_dir, stage, spark)
+    p = _warm_path(sf_dir, stage)
     return warm(read_stage(spark, p)) if p else builder(spark, sf_dir)
 
 
@@ -921,6 +911,18 @@ def kg_map_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _kg_firsts(ents: DataFrame) -> DataFrame:
+    """(node_id, name_normalized, name): M7 first-writer-wins surface
+    naming (registry dict semantics, data/ingestion.py:309-344 → window
+    over the global mention order) over entity mentions ``ents``."""
+    global_order = W.partitionBy("node_id").orderBy("paper_id", "chunk_index", "pos")
+    return (
+        ents.withColumn("g", F.row_number().over(global_order))
+        .filter(F.col("g") == 1)
+        .select("node_id", "name_normalized", F.col("token").alias("name"))
+    )
+
+
 @query(
     "kg_nodes_build",
     oracle=f"""
@@ -942,20 +944,13 @@ def kg_map_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def kg_nodes_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GRAPH.KNOWLEDGE_NODES analogue (sql/01_create_schema.sql:44-51):
-    M7 first-writer-wins surface naming (registry dict semantics,
-    data/ingestion.py:309-344 → window over the global mention order) +
-    A1 countDistinct paper_count. The reference leaves node.embedding
-    null (data/ingestion.py:373) — omitted here."""
+    M7 first-writer-wins surface naming (``_kg_firsts``) + A1
+    countDistinct paper_count. The reference leaves node.embedding null
+    (data/ingestion.py:373) — omitted here."""
     ents = chunk_entities_df(spark, sf_dir)
-    global_order = W.partitionBy("node_id").orderBy("paper_id", "chunk_index", "pos")
-    firsts = (
-        ents.withColumn("g", F.row_number().over(global_order))
-        .filter(F.col("g") == 1)
-        .select("node_id", "name_normalized", F.col("token").alias("name"))
-    )
     counts = ents.groupBy("node_id").agg(F.countDistinct("paper_id").alias("paper_count"))
     return (
-        firsts.join(counts, "node_id")
+        _kg_firsts(ents).join(counts, "node_id")
         .select("node_id", F.lit("Entity").alias("label"), "name", "name_normalized", "paper_count")
         .orderBy("node_id")
     )
@@ -1138,6 +1133,81 @@ KG_QUERY_ENTITIES = ("spark", "join", "filter")
 _IN_LIST = ", ".join(f"'{e}'" for e in KG_QUERY_ENTITIES)
 
 
+def _kg_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The co-occurrence KG's one edge relation, which every KG query
+    derives from: canonical ``(src, tgt, weight)`` rows with src < tgt,
+    unaggregated. Summing ``weight`` per pair gives the edge weight; the
+    distinct pairs are the edge set.
+
+    Warm: the kg_edges checkpoint's per-paper rows (predicates reach the
+    parquet scan). Cold: one weight-1.0 row per in-chunk co-mention —
+    the J6 self-join over the cached ``chunk_entities_df``, which is
+    cheaper than ``kg_edges_build`` (that re-chunks the text)."""
+    p = _warm_path(sf_dir, "kg_edges")
+    if p:
+        return read_stage(spark, p).select(
+            F.col("source_node_id").alias("src"),
+            F.col("target_node_id").alias("tgt"),
+            "weight",
+        )
+    ents = chunk_entities_df(spark, sf_dir).select("chunk_id", "node_id")
+    a, b = ents.alias("a"), ents.alias("b")
+    return a.join(
+        b,
+        (F.col("a.chunk_id") == F.col("b.chunk_id"))
+        & (F.col("a.node_id") < F.col("b.node_id")),
+    ).select(
+        F.col("a.node_id").alias("src"),
+        F.col("b.node_id").alias("tgt"),
+        F.lit(1.0).alias("weight"),
+    )
+
+
+def _both_ways(df: DataFrame, a: str, b: str, *rest: str) -> DataFrame:
+    """Each row of ``df`` as (a, b, *rest) and as (b, a, *rest), exploded
+    map-side, so the source is computed once, not once per orientation
+    under a union."""
+    return (
+        df.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col(a).alias(a), F.col(b).alias(b), *rest),
+                    F.struct(F.col(b).alias(a), F.col(a).alias(b), *rest),
+                )
+            ).alias("o")
+        )
+        .select("o.*")
+    )
+
+
+def _kg_und_occurrences(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``_kg_pairs`` in both orientations, still unaggregated."""
+    return _both_ways(_kg_pairs(spark, sf_dir), "src", "tgt", "weight")
+
+
+def _kg_canon(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The distinct canonical (u < v) edge set."""
+    return _kg_pairs(spark, sf_dir).select(F.col("src").alias("u"), F.col("tgt").alias("v")).distinct()
+
+
+def _kg_adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Directed (src, dst) adjacency: every edge in both orientations,
+    once. Deduplicated before the orientations are added, so the
+    distinct shuffles canonical rows only."""
+    canon = _kg_canon(spark, sf_dir).select(F.col("u").alias("src"), F.col("v").alias("dst"))
+    return _both_ways(canon, "src", "dst")
+
+
+def _kg_node_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The KG's node universe (isolated nodes included): kg_nodes when
+    warm (one row per node already), the distinct entity mentions
+    otherwise."""
+    p = _warm_path(sf_dir, "kg_nodes")
+    if p:
+        return read_stage(spark, p).select("node_id")
+    return chunk_entities_df(spark, sf_dir).select("node_id").distinct()
+
+
 def _kg_relations(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """(edges, firsts) for the KG query layer.
 
@@ -1164,30 +1234,12 @@ def _kg_relations(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFram
 
 
 def _kg_relations_cold(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    ents = chunk_entities_df(spark, sf_dir).select(
-        "chunk_id", "paper_id", "chunk_index", "pos", "token", "name_normalized", "node_id"
-    )
-    a = ents.alias("a")
-    b = ents.alias("b")
     edges = (
-        a.join(
-            b,
-            (F.col("a.chunk_id") == F.col("b.chunk_id"))
-            & (F.col("a.node_id") < F.col("b.node_id")),
-        )
-        .groupBy(
-            F.col("a.node_id").alias("source_node_id"),
-            F.col("b.node_id").alias("target_node_id"),
-        )
-        .agg(F.count("*").cast("double").alias("weight"))
+        _kg_pairs(spark, sf_dir)
+        .groupBy(F.col("src").alias("source_node_id"), F.col("tgt").alias("target_node_id"))
+        .agg(F.sum("weight").alias("weight"))
     )
-    global_order = W.partitionBy("node_id").orderBy("paper_id", "chunk_index", "pos")
-    firsts = (
-        ents.withColumn("g", F.row_number().over(global_order))
-        .filter(F.col("g") == 1)
-        .select("node_id", "name_normalized", F.col("token").alias("name"))
-    )
-    return edges, firsts
+    return edges, _kg_firsts(chunk_entities_df(spark, sf_dir))
 
 
 def kg_neighborhood_for(
@@ -1371,87 +1423,6 @@ def corpus_chunk_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _kg_und_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unaggregated undirected co-occurrence rows (src, tgt, weight) —
-    every per-paper edge occurrence in BOTH orientations, no aggregation.
-    Summing ``weight`` per (src, tgt) over this relation reproduces the
-    aggregated undirected edge weights exactly, so consumers can push
-    their own restriction (seed filter, frontier semi-join) BELOW the
-    aggregation instead of aggregating the full graph first.
-
-    Warm: the kg_edges checkpoint (a parquet scan per orientation — seed
-    predicates push to the scan). Cold: the per-chunk pair self-join with
-    weight 1.0 per occurrence (sum of ones ≡ the per-paper counts)."""
-    pe = _warm_path(sf_dir, "kg_edges", spark)
-    if pe:
-        e = read_stage(spark, pe).select(
-            F.col("source_node_id").alias("src"),
-            F.col("target_node_id").alias("tgt"),
-            "weight",
-        )
-    else:
-        ents = chunk_entities_df(spark, sf_dir).select("chunk_id", "node_id")
-        a, b = ents.alias("a"), ents.alias("b")
-        e = a.join(
-            b,
-            (F.col("a.chunk_id") == F.col("b.chunk_id"))
-            & (F.col("a.node_id") < F.col("b.node_id")),
-        ).select(
-            F.col("a.node_id").alias("src"),
-            F.col("b.node_id").alias("tgt"),
-            F.lit(1.0).alias("weight"),
-        )
-    return e.unionByName(
-        e.select(F.col("tgt").alias("src"), F.col("src").alias("tgt"), "weight")
-    )
-
-
-def _kg_und_occurrences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same relation as ``_kg_und_raw`` (both orientations, unaggregated)
-    but produced from ONE pass over the canonical rows: each row is
-    exploded map-side into its two orientations instead of instantiating
-    the source twice under a union (guide §2.1 — when warm that halves
-    the kg_edges checkpoint scans; cold it halves the pair self-joins).
-    Use this when no seed predicate needs to reach the scan per
-    orientation; ``_kg_und_raw`` remains for consumers that push an
-    endpoint filter into each union branch."""
-    pe = _warm_path(sf_dir, "kg_edges", spark)
-    if pe:
-        e = read_stage(spark, pe).select(
-            F.col("source_node_id").alias("src"),
-            F.col("target_node_id").alias("tgt"),
-            "weight",
-        )
-    else:
-        ents = chunk_entities_df(spark, sf_dir).select("chunk_id", "node_id")
-        a, b = ents.alias("a"), ents.alias("b")
-        e = a.join(
-            b,
-            (F.col("a.chunk_id") == F.col("b.chunk_id"))
-            & (F.col("a.node_id") < F.col("b.node_id")),
-        ).select(
-            F.col("a.node_id").alias("src"),
-            F.col("b.node_id").alias("tgt"),
-            F.lit(1.0).alias("weight"),
-        )
-    return e.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("src").alias("src"),
-                    F.col("tgt").alias("tgt"),
-                    F.col("weight").alias("weight"),
-                ),
-                F.struct(
-                    F.col("tgt").alias("src"),
-                    F.col("src").alias("tgt"),
-                    F.col("weight").alias("weight"),
-                ),
-            )
-        ).alias("o")
-    ).select("o.src", "o.tgt", "o.weight")
-
-
 @query(
     "kg_two_hop",
     oracle=f"""
@@ -1495,53 +1466,24 @@ def kg_two_hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     empty, so the query reports path strength instead).
 
     Plan shape (the r2 verdict's #1 fix): the frontier restriction sits
-    BELOW every aggregation. Hop 1 filters src == seed on the raw
-    (unaggregated) edge occurrences — the predicate reaches the parquet
-    scan — and aggregates only the seed's incident rows. Hop 2 broadcasts
-    the (tiny) hop-1 frontier, hash-joins it into the raw relation
-    map-side, and only then aggregates per (src, tgt) — so the one real
-    shuffle carries frontier-incident rows, never the full graph. The old
-    plan aggregated the complete edge relation up to three times.
-
-    Warm fast path (r16, guide §2.1/§6.3): kg_edges rows are per-paper
-    (keyed (src, tgt, paper_id)) in canonical src < tgt orientation. The
-    generic shape reads the checkpoint FOUR times — the both-orientation
-    union instantiated separately under hop 1 and hop 2. Instead: hop 1
-    is ONE scan with the seed filter OR-pushed to parquet over both
-    endpoint columns (seed sits on exactly one side of a canonical row,
-    so summing weight per other-endpoint is the same h1w); hop 2 is ONE
-    scan exploded into both orientations map-side and hash-joined
-    against the broadcast frontier. 4 scans -> 2; the aggregation
-    structure (and its frontier-restriction-below-aggregation shape) is
-    unchanged. Row-identity with the cold derivation is pinned in
-    tests/test_ingest.py::test_warm_warehouse_queries_equal_cold."""
+    BELOW every aggregation. Hop 1 reads the canonical pair rows once,
+    with the seed filter OR-ed over both endpoints (the seed sits on
+    exactly one side of a canonical row; warm, the predicate reaches the
+    parquet scan), and aggregates only the seed's incident rows. Hop 2
+    broadcasts the (tiny) hop-1 frontier, hash-joins it into the pair
+    rows exploded map-side into both orientations, and only then
+    aggregates per (src, tgt) — so the one real shuffle carries
+    frontier-incident rows, never the full graph. Warm ≡ cold is pinned
+    in tests/test_ingest.py::test_warm_warehouse_queries_equal_cold."""
     seed = "node_spark"
-    pe = _warm_path(sf_dir, "kg_edges", spark)
-    if pe:
-        e = read_stage(spark, pe)
-        hop1 = (
-            e.filter(
-                (F.col("source_node_id") == seed)
-                | (F.col("target_node_id") == seed)
-            )
-            .select(
-                F.when(
-                    F.col("source_node_id") == seed, F.col("target_node_id")
-                )
-                .otherwise(F.col("source_node_id"))
-                .alias("node_id"),
-                "weight",
-            )
-            .groupBy("node_id")
-            .agg(F.sum("weight").alias("h1w"))
-        )
-    else:
-        hop1 = (
-            _kg_und_raw(spark, sf_dir)
-            .filter(F.col("src") == seed)
-            .groupBy(F.col("tgt").alias("node_id"))
-            .agg(F.sum("weight").alias("h1w"))
-        )
+    src, tgt = F.col("src"), F.col("tgt")
+    hop1 = (
+        _kg_pairs(spark, sf_dir)
+        .filter((src == seed) | (tgt == seed))
+        .select(F.when(src == seed, tgt).otherwise(src).alias("node_id"), "weight")
+        .groupBy("node_id")
+        .agg(F.sum("weight").alias("h1w"))
+    )
     both = _kg_und_occurrences(spark, sf_dir)
     hop2 = (
         both.join(F.broadcast(hop1), both.src == F.col("node_id"))
@@ -1639,7 +1581,7 @@ def corpus_delete_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     # mention relation: the kg_map checkpoint lacks paper_id, so the warm
     # path recovers it through the chunks checkpoint (chunk_id → paper_id
     # is functional); cold path derives mentions directly.
-    pm, pc = _warm_path(sf_dir, "kg_map", spark), _warm_path(sf_dir, "chunks", spark)
+    pm, pc = _warm_path(sf_dir, "kg_map"), _warm_path(sf_dir, "chunks")
     if pm and pc:
         ents = (
             read_stage(spark, pm)
@@ -1763,60 +1705,20 @@ def kg_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     damping multiply-then-floor is exact — no float accumulation order
     anywhere.
 
-    Scale shape: adjacency is the distinct chunk-co-occurrence pair set
-    (both directions from one <> self-join); each round is one equi-join
+    Scale shape: adjacency is the distinct co-occurrence pair set in
+    both directions (``_kg_adjacency``); each round is one equi-join
     shuffle on src + one partial agg on dst — K rounds = K linear passes
     over edges, the standard distributed PageRank plan. Isolated and
     dangling nodes hold the base rank via the left join."""
-    # Warm: adjacency from the materialized kg_edges checkpoint (distinct
-    # canonical pairs + their reverses — identical to the co-occurrence
-    # pair set by construction) and the node universe from kg_nodes, so a
-    # warehoused corpus pays two compact parquet scans instead of
-    # re-deriving entities from raw text. Cold: the ents-based derivation
-    # (what the oracle mirrors; warm==cold asserted in tests).
-    pe = _warm_path(sf_dir, "kg_edges", spark)
-    pn = _warm_path(sf_dir, "kg_nodes", spark)
-    if pe and pn:
-        canon = (
-            read_stage(spark, pe)
-            .select("source_node_id", "target_node_id")
-            .distinct()
-        )
-        # r16: eager localCheckpoint instead of cache() — the distinct
-        # adjacency is node²-bounded (tiny next to the edge table), and
-        # the checkpoint materializes AFTER AQE coalesces the distinct's
-        # output, so the K iteration passes read a few right-sized
-        # partitions instead of the 64 the cached union froze (profiled:
-        # every downstream stage ran 64 tasks over <1k rows). Lineage is
-        # also cut, so each iteration's plan stays flat.
-        adj = (
-            canon.select(
-                F.col("source_node_id").alias("src"),
-                F.col("target_node_id").alias("dst"),
-            )
-            .unionByName(
-                canon.select(
-                    F.col("target_node_id").alias("src"),
-                    F.col("source_node_id").alias("dst"),
-                )
-            )
-            .localCheckpoint(eager=True)
-        )
-        nodes = read_stage(spark, pn).select("node_id")
-    else:
-        ents = chunk_entities_df(spark, sf_dir).select("chunk_id", "node_id")
-        a, b = ents.alias("a"), ents.alias("b")
-        adj = (
-            a.join(
-                b,
-                (F.col("a.chunk_id") == F.col("b.chunk_id"))
-                & (F.col("a.node_id") != F.col("b.node_id")),
-            )
-            .select(F.col("a.node_id").alias("src"), F.col("b.node_id").alias("dst"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        nodes = ents.select("node_id").distinct()
+    # r16: eager localCheckpoint instead of cache() — the distinct
+    # adjacency is node²-bounded (tiny next to the edge table), and the
+    # checkpoint materializes AFTER AQE coalesces the distinct's output,
+    # so the K iteration passes read a few right-sized partitions instead
+    # of the 64 a cached union froze (profiled: every downstream stage
+    # ran 64 tasks over <1k rows). Lineage is also cut, so each
+    # iteration's plan stays flat.
+    adj = _kg_adjacency(spark, sf_dir).localCheckpoint(eager=True)
+    nodes = _kg_node_ids(spark, sf_dir)
     # cache hygiene: the adjacency checkpoint blocks are
     # ContextCleaner-managed (released when the result drops its
     # reference), so no CacheManager entry and no unpersist bookkeeping
@@ -1887,46 +1789,14 @@ def kg_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     id-ordered enumeration and agrees on the same counts. The wedge
     count (coefficient denominator) is one degree aggregation — exact
     integers throughout, with the single final division producing the
-    double both engines agree on.
-
-    Warm: canonical pairs straight from the kg_edges checkpoint (same
-    distinct set by construction). Cold: the ents co-occurrence
-    derivation the oracle mirrors.
-    """
-    pe = _warm_path(sf_dir, "kg_edges", spark)
-    if pe:
-        # r16: eager localCheckpoint instead of cache() — same rationale
-        # as kg_pagerank: the node²-bounded distinct edge set
-        # materializes AFTER AQE coalesces it, so the wedge/closure
-        # passes read right-sized partitions (the cached form froze 32+
-        # partitions for <1k rows and every downstream stage paid the
-        # task count), lineage is cut, and no CacheManager entry needs
-        # unpersist bookkeeping.
-        canon = (
-            read_stage(spark, pe)
-            .select(
-                F.col("source_node_id").alias("u"),
-                F.col("target_node_id").alias("v"),
-            )
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-    else:
-        ents = chunk_entities_df(spark, sf_dir).select("chunk_id", "node_id")
-        a, b = ents.alias("a"), ents.alias("b")
-        canon = (
-            a.join(
-                b,
-                (F.col("a.chunk_id") == F.col("b.chunk_id"))
-                & (F.col("a.node_id") != F.col("b.node_id")),
-            )
-            .select(
-                F.least(F.col("a.node_id"), F.col("b.node_id")).alias("u"),
-                F.greatest(F.col("a.node_id"), F.col("b.node_id")).alias("v"),
-            )
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
+    double both engines agree on."""
+    # r16: eager localCheckpoint instead of cache() — same rationale as
+    # kg_pagerank: the node²-bounded distinct edge set materializes AFTER
+    # AQE coalesces it, so the wedge/closure passes read right-sized
+    # partitions (the cached form froze 32+ partitions for <1k rows and
+    # every downstream stage paid the task count), lineage is cut, and
+    # no CacheManager entry needs unpersist bookkeeping.
+    canon = _kg_canon(spark, sf_dir).localCheckpoint(eager=True)
     deg = (
         canon.select(F.col("u").alias("node_id"))
         .unionAll(canon.select(F.col("v").alias("node_id")))
@@ -2031,19 +1901,8 @@ def kg_reachability_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     DataFrame joins; this query is the declarative twin, and the
     frontier-with-min-depth DataFrame loop (kg_pagerank's shape) is
     the 100 TB upgrade path until recursive UNION lands."""
-    ents = chunk_entities_df(spark, sf_dir).select("chunk_id", "node_id")
-    a, b = ents.alias("a"), ents.alias("b")
-    adj = (
-        a.join(
-            b,
-            (F.col("a.chunk_id") == F.col("b.chunk_id"))
-            & (F.col("a.node_id") != F.col("b.node_id")),
-        )
-        .select(F.col("a.node_id").alias("src"), F.col("b.node_id").alias("dst"))
-        .distinct()
-    )
-    adj.createOrReplaceTempView("kg_adj_v")
-    ents.select("node_id").createOrReplaceTempView("kg_ents_v")
+    _kg_adjacency(spark, sf_dir).createOrReplaceTempView("kg_adj_v")
+    _kg_node_ids(spark, sf_dir).createOrReplaceTempView("kg_ents_v")
     return spark.sql(f"""
         WITH RECURSIVE reach(node_id, depth) AS (
           SELECT (SELECT MIN(node_id) FROM kg_ents_v), 0
@@ -2091,19 +1950,7 @@ def kg_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     hub-aware orientation and salting matter; a flat histogram means
     the simple plans win). Degrees are integers, the bin edge is
     floor(log2 d) — exact in both engines for the KG's degree range."""
-    ents = chunk_entities_df(spark, sf_dir).select("chunk_id", "node_id")
-    a, b = ents.alias("a"), ents.alias("b")
-    deg = (
-        a.join(
-            b,
-            (F.col("a.chunk_id") == F.col("b.chunk_id"))
-            & (F.col("a.node_id") != F.col("b.node_id")),
-        )
-        .select(F.col("a.node_id").alias("src"), F.col("b.node_id").alias("dst"))
-        .distinct()
-        .groupBy("src")
-        .agg(F.count("*").alias("d"))
-    )
+    deg = _kg_adjacency(spark, sf_dir).groupBy("src").agg(F.count("*").alias("d"))
     binned = deg.withColumn(
         "log2_bin", F.floor(F.log(F.col("d").cast("double")) / F.log(F.lit(2.0))).cast("int")
     )
@@ -2164,38 +2011,12 @@ _DUCK_SPARSE_KG = f"""
 def _kg_sparse_edges(
     spark: SparkSession, sf_dir: str, mod: int = KG_SPARSE_MOD
 ) -> DataFrame:
-    """Canonical (u < v) sparse-KG edges — the kg_edges checkpoint's
-    distinct pair set when warm, the co-occurrence derive otherwise,
-    filtered to the deterministic hash residue (keep 1/``mod`` of
-    edges). Eagerly localCheckpointed: every consumer fans it out 4-5
-    ways (symmetric neighbor lists, degree counts, the anti-join
-    probe), and the relation is |E|-bounded."""
-    pe = _warm_path(sf_dir, "kg_edges", spark)
-    if pe:
-        canon = (
-            read_stage(spark, pe)
-            .select(
-                F.col("source_node_id").alias("u"),
-                F.col("target_node_id").alias("v"),
-            )
-            .distinct()
-        )
-    else:
-        ents = chunk_entities_df(spark, sf_dir).select("chunk_id", "node_id")
-        a, b = ents.alias("a"), ents.alias("b")
-        canon = (
-            a.join(
-                b,
-                (F.col("a.chunk_id") == F.col("b.chunk_id"))
-                & (F.col("a.node_id") != F.col("b.node_id")),
-            )
-            .select(
-                F.least(F.col("a.node_id"), F.col("b.node_id")).alias("u"),
-                F.greatest(F.col("a.node_id"), F.col("b.node_id")).alias("v"),
-            )
-            .distinct()
-        )
-    sparse = canon.where(token_hash(F.concat_ws("|", "u", "v")) % mod == 0)
+    """Canonical (u < v) sparse-KG edges: the distinct edge set
+    (``_kg_canon``) filtered to the deterministic hash residue (keep
+    1/``mod`` of edges). Eagerly localCheckpointed: every consumer fans
+    it out 4-5 ways (symmetric neighbor lists, degree counts, the
+    anti-join probe), and the relation is |E|-bounded."""
+    sparse = _kg_canon(spark, sf_dir).where(token_hash(F.concat_ws("|", "u", "v")) % mod == 0)
     return sparse.localCheckpoint(eager=True)
 
 

@@ -242,7 +242,6 @@ def build_corpus(
     sf_dir: str,
     out_dir: str,
     resume: bool = True,
-    max_parallel: int | None = None,
 ) -> dict[str, dict[str, object]]:
     """Run all stages, checkpointing each to ``out_dir/<name>``; with
     ``resume`` (default), stages whose checkpoint already exists are
@@ -250,26 +249,22 @@ def build_corpus(
     report: per-table row count + OK/EMPTY status + skip flag.
 
     Stages run as a DEPENDENCY DAG (``STAGE_DEPS``), up to
-    ``max_parallel`` at a time (default ``BUILD_PARALLEL``; 1 = the
-    sequential build). Concurrent Spark jobs from driver threads are the
-    standard way to keep a cluster busy when individual stages can't
-    saturate it — at 100 TB the independent stage families (KG
-    extraction, dedup signatures, vector indexes, text indexes) have no
-    reason to idle behind each other, and the scheduler interleaves
-    their tasks.
-    Per-stage results and the report are identical to the sequential
-    build (each stage writes its own checkpoint; dependents start only
-    after the upstream _SUCCESS marker lands)."""
+    ``BUILD_PARALLEL`` at a time. Concurrent Spark jobs from driver
+    threads are the standard way to keep a cluster busy when individual
+    stages can't saturate it — at 100 TB the independent stage families
+    (KG extraction, dedup signatures, vector indexes, text indexes) have
+    no reason to idle behind each other, and the scheduler interleaves
+    their tasks. Per-stage results and the report do not depend on the
+    interleaving (each stage writes its own checkpoint; dependents start
+    only after the upstream _SUCCESS marker lands)."""
     from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 
-    if max_parallel is None:
-        max_parallel = BUILD_PARALLEL
     order = [name for name, _, _ in STAGES]
     stages = {name: (builder, parts) for name, builder, parts in STAGES}
     report: dict[str, dict[str, object]] = {}
     done: set[str] = set()
     running: dict[object, str] = {}
-    with ThreadPoolExecutor(max_workers=max(1, max_parallel)) as pool:
+    with ThreadPoolExecutor(max_workers=BUILD_PARALLEL) as pool:
         while len(done) < len(order):
             for name in order:
                 if (

@@ -1036,8 +1036,8 @@ def dedup_admission_stream_run(
         # keeps the planner's layout.
         from ..pipeline.corpus import _warm_path
 
-        wp = _warm_path(sf_dir, "doc_shingles", spark)
-        if wp and "://" not in wp:
+        wp = _warm_path(sf_dir, "doc_shingles")
+        if wp:
             idx = idx.coalesce(_width_for(spark, _dir_bytes(wp)))
         idx.write.mode("overwrite").parquet(index_dir)
         spark.read.parquet(index_dir).groupBy("doc_id").agg(

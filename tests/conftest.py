@@ -34,7 +34,6 @@ def spark():
         os.environ["SPARK_GRAFT_DRIVER_MEM"] = test_mem
     spark = get_spark(
         app_name="cs5542-tests",
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]",
         shuffle_partitions=8,
         pretouch=True,
     )

@@ -469,3 +469,38 @@ def test_link_prediction_math_on_hand_verified_graphs(spark, monkeypatch):
         for b in leaves[i + 1 :]
     }
     assert star == expected
+
+
+def test_kg_queries_read_one_edge_relation(spark, monkeypatch):
+    """The KG queries derive their edges from ``_kg_pairs`` alone: over a
+    hand-built 5-node graph (the spark-a-b triangle plus spark-c and
+    c-d; the a-spark pair appears on two papers), with no corpus behind
+    it, triangles, degree bins and 2-hop path weights match hand-computed
+    values."""
+    from cs_5542_lab_6_spark.pipeline import corpus as C
+
+    pairs = spark.createDataFrame(
+        [
+            ("node_a", "node_spark", 2.0),
+            ("node_a", "node_spark", 1.0),
+            ("node_b", "node_spark", 1.0),
+            ("node_a", "node_b", 4.0),
+            ("node_c", "node_spark", 2.0),
+            ("node_c", "node_d", 5.0),
+        ],
+        "src string, tgt string, weight double",
+    )
+    monkeypatch.setattr(C, "_kg_pairs", lambda *_a: pairs)
+
+    tri = C.kg_triangle_stats(spark, "unused").first()
+    # degrees spark 3, a 2, b 2, c 2, d 1: wedges 3 + 1 + 1 + 1 + 0
+    assert (tri.n_triangles, tri.n_wedges, tri.global_clustering) == (1, 6, 0.5)
+
+    bins = [tuple(r) for r in C.kg_degree_distribution(spark, "unused").collect()]
+    # (log2_bin, bin_floor, n_nodes, min_degree, max_degree)
+    assert bins == [(0, 1, 1, 1, 1), (1, 2, 4, 2, 3)]
+
+    # hop 1 from spark: a 2+1 = 3, b 1, c 2; best 2-paths
+    # spark-a-b 3*4, spark-c-d 2*5, spark-b-a 1*4
+    hops = [tuple(r) for r in C.kg_two_hop(spark, "unused").collect()]
+    assert hops == [("node_b", 12.0), ("node_d", 10.0), ("node_a", 4.0)]

@@ -110,6 +110,16 @@ def test_build_rejects_a_builder_that_drifts_from_its_declaration(
     assert not (out / "papers").exists()
 
 
+def test_warehouse_uri_is_rejected(monkeypatch):
+    """The warm warehouse is a local directory: a URI raises naming the
+    variable instead of every warm read silently falling back to cold."""
+    from cs_5542_lab_6_spark.pipeline import corpus as C
+
+    monkeypatch.setenv(C.WAREHOUSE_ENV, "s3a://bucket/warehouse")
+    with pytest.raises(ValueError, match=C.WAREHOUSE_ENV):
+        C._warm_path("/data/sf0.001", "chunks")
+
+
 @pytest.mark.slow
 def test_warm_warehouse_queries_equal_cold(spark, sf_dir, tmp_path, monkeypatch):
     """The query layer served from materialized checkpoints must be
@@ -155,6 +165,12 @@ def test_warm_warehouse_queries_equal_cold(spark, sf_dir, tmp_path, monkeypatch)
         # sparse-KG shadow edges come from the kg_edges checkpoint (r11)
         "kg_link_prediction",
         "kg_degree_assortativity",
+        "kg_sparse_neighborhood_jaccard",
+        # the rest of the KG family reads the same edge relation
+        # (_kg_pairs): kg_edges warm, the entity self-join cold
+        "kg_triangle_stats",
+        "kg_reachability_sql",
+        "kg_degree_distribution",
         # tf-idf keywords served from bm25_postings/doclen (r11)
         "doc_tfidf_keywords",
         # IVF-PQ composes both index stages (ivf_centroids + pq_codes)
@@ -407,9 +423,9 @@ def test_stage_deps_cover_every_warm_read(spark, sf_dir, tmp_path, monkeypatch):
     real = C._warm_path
     requested: list[str] = []
 
-    def spy(sf, stage, spark_=None):
+    def spy(sf, stage):
         requested.append(stage)
-        return real(sf, stage, spark_)
+        return real(sf, stage)
 
     monkeypatch.setattr(C, "_warm_path", spy)
     try:
