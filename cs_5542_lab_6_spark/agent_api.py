@@ -13,8 +13,11 @@ Serving cache: with a warm warehouse the tools read Spark-cached
 relations instead of re-deriving them per call (pipeline/corpus.py,
 ``warm_cached``): the retrieval relation (chunks joined with paper
 titles, with embeddings; about one copy of the chunk table in memory),
-the papers table and the aggregated KG edges with node names. Each
-refreshes when a stage it reads is recommitted. The cold path is never
+the papers table and the KG neighbor relation (every node's named
+1-hop neighbors in both directions, ``kg_neighbors_source``). Each
+refreshes when a stage it reads is recommitted. A warm tool call is
+then one small Spark job over one cached relation: a scored top-k, a
+top-1 key lookup, or an IN-list filtered top-k. The cold path is never
 served from this cache: cold, every call derives its relations anew.
 
 The LLM pieces are deliberately outside the engine (SURVEY §7.3): answer
@@ -34,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from .functions.embedding import duck_embedding_cte, duck_qvec_sql, embed_query
-from .functions.vectors import cosine_score
+from .functions.vectors import cosine_score_const
 from .pipeline.corpus import (
     _DEFAULT_CHUNKS_SQL,
     chunks_source,
@@ -75,6 +78,7 @@ def retrieval_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     return warm_cached(
         spark,
         sf_dir,
+        "retrieval",
         ("chunks", "papers"),
         _retrieval,
         lambda: _retrieval(chunks_source(spark, sf_dir), papers_build(spark, sf_dir)),
@@ -85,10 +89,10 @@ def search_papers(
     spark: SparkSession, sf_dir: str, question: str, top_k: int = DEFAULT_TOP_K
 ) -> DataFrame:
     """Tool 1 (tools.py:45-92): embed the question driver-side (M3),
-    score every chunk of ``retrieval_source`` JVM-side, top-k with
-    deterministic tiebreak. Result keys are the reference tool contract
-    (tools.py:80-85): chunk_id, paper_id, title, section, text, score."""
-    qvec = F.array(*[F.lit(x) for x in embed_query(question)]).cast("array<float>")
+    score every chunk of ``retrieval_source`` JVM-side with one SQL
+    score expression, top-k with deterministic tiebreak. Result keys are
+    the reference tool contract (tools.py:80-85): chunk_id, paper_id,
+    title, section, text, score."""
     return (
         retrieval_source(spark, sf_dir)
         .select(
@@ -97,7 +101,7 @@ def search_papers(
             "title",
             "section",
             "text",
-            cosine_score(F.col("embedding"), qvec).alias("score"),
+            cosine_score_const("embedding", embed_query(question)).alias("score"),
         )
         .orderBy(F.desc("score"), F.asc("chunk_id"))
         .limit(top_k)
@@ -107,8 +111,16 @@ def search_papers(
 def get_paper_details(spark: SparkSession, sf_dir: str, paper_id: str) -> DataFrame:
     """Tool 2 (tools.py:116-125): point lookup by primary key over
     ``papers_source`` (the serving cache when warm; cold, an equality
-    predicate pushed into the derivation)."""
-    return papers_source(spark, sf_dir).filter(F.col("paper_id") == paper_id).limit(1)
+    predicate pushed into the derivation). Ordered by the key, so the
+    lookup plans as a top-1 sort — one job over every partition, hit or
+    miss — rather than a limit that scans one partition and then scales
+    up; cold, the sort replaces ``papers_build``'s own."""
+    return (
+        papers_source(spark, sf_dir)
+        .filter(F.col("paper_id") == paper_id)
+        .orderBy("paper_id")
+        .limit(1)
+    )
 
 
 def search_knowledge_graph(

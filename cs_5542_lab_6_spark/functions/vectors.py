@@ -14,6 +14,8 @@ deterministic for a given row (no partition-order dependence).
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -60,3 +62,19 @@ def cosine_score(emb: Column | str, qvec: Column | str, decimals: int = 4) -> Co
     stable for hash-checking (SURVEY §4.4 determinism notes).
     """
     return F.round(dot(emb, qvec), decimals)
+
+
+def cosine_score_const(emb: str, qvec: Sequence[float], decimals: int = 4) -> Column:
+    """``cosine_score`` of column ``emb`` against a constant query vector,
+    written as one SQL expression: the fold, casts and rounding are the
+    same, so scores are bit-identical, but the plan is built in one
+    parser call instead of one py4j call per component. The query is
+    rounded through FLOAT like the embedding columns it is compared
+    with; each component is an exact ``D``-suffixed double literal
+    (``repr`` round-trips a double)."""
+    lits = ", ".join(f"{float(x)!r}D" for x in qvec)
+    return F.expr(
+        f"round(aggregate(zip_with(CAST({emb} AS ARRAY<DOUBLE>), "
+        f"CAST(CAST(array({lits}) AS ARRAY<FLOAT>) AS ARRAY<DOUBLE>), "
+        f"(x, y) -> x * y), 0.0D, (acc, x) -> acc + x), {decimals})"
+    )

@@ -368,20 +368,24 @@ def chunks_with_embeddings_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 # retrieval must not re-chunk and re-embed the corpus per query.
 #
 # Serving cache (``warm_cached``): the research-assistant tools go one
-# step further, like the reference's once-per-agent chunk fetch. Four
+# step further, like the reference's once-per-agent chunk fetch. Five
 # relations derived from warm stages are held in Spark's cache, one per
-# (session, stage paths): the retrieval relation (chunks ⋈ paper titles,
-# agent_api), the papers relation (``papers_source``), the KG query
-# relations (``_kg_relations``) and the entity mentions the KG builders
-# share (``chunk_entities_df``). Each is keyed on its stages' _SUCCESS
-# commits, so a rebuild — in this process or another — unpersists the
-# old relation and the next call derives and caches the new one; a bare
-# ``.cache()`` would not do, since Spark's CacheManager matches plans by
-# path and keeps serving the old commit's rows. The cold path never
-# goes through this cache (the registry's cold derivations are as
-# before). Memory: about one copy of the chunk table (text +
-# embedding), plus the much smaller papers table and aggregated KG
-# edges, held MEMORY_AND_DISK so pressure spills rather than fails.
+# (session, relation name, stage paths): the retrieval relation (chunks
+# ⋈ paper titles, agent_api), the papers relation (``papers_source``),
+# the KG query relations (``_kg_relations``: aggregated edges and node
+# names), the KG tool's neighbor relation (``_kg_neighbors``: every
+# node's named 1-hop neighbors in both directions, so a tool call is a
+# filter over one cached relation) and the entity mentions the KG
+# builders share (``chunk_entities_df``). Each is keyed on its stages'
+# _SUCCESS commits, so a rebuild — in this process or another —
+# unpersists the old relation and the next call derives and caches the
+# new one; a bare ``.cache()`` would not do, since Spark's CacheManager
+# matches plans by path and keeps serving the old commit's rows. The
+# cold path never goes through this cache (the registry's cold
+# derivations are as before). Memory: about one copy of the chunk table
+# (text + embedding), plus the much smaller papers table, aggregated KG
+# edges and neighbor rows (two per edge), held MEMORY_AND_DISK so
+# pressure spills rather than fails.
 
 WAREHOUSE_ENV = "SPARK_GRAFT_WAREHOUSE"
 
@@ -503,8 +507,9 @@ def read_stage(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(STAGE_SCHEMAS[stage]).parquet(path).select(*cols)
 
 
-# (session, stage paths) -> (their commits, the cached relations); the
-# lock makes check-commit-then-replace atomic under a threaded server.
+# (session, relation name, stage paths) -> (their commits, the cached
+# relations); the lock makes check-commit-then-replace atomic under a
+# threaded server.
 _SERVING: dict[tuple, tuple[tuple, tuple[DataFrame, ...]]] = {}
 _SERVING_LOCK = threading.Lock()
 
@@ -512,14 +517,15 @@ _SERVING_LOCK = threading.Lock()
 def warm_cached(
     spark: SparkSession,
     sf_dir: str,
+    name: str,
     stages: tuple[str, ...],
     derive: Callable[..., DataFrame | tuple[DataFrame, ...]],
     cold: Callable[[], DataFrame | tuple[DataFrame, ...]],
 ) -> DataFrame | tuple[DataFrame, ...]:
-    """The serving cache (see the block comment above): ``derive`` over
-    the warm ``stages`` (one ``read_stage`` each, in order), cached and
-    reused until a stage's commit changes; ``cold()`` uncached when any
-    stage is cold. ``derive`` may return one relation or a tuple; each
+    """The serving cache (see the block comment above): relation
+    ``name``, ``derive`` over the warm ``stages`` (one ``read_stage``
+    each, in order), cached and reused until a stage's commit changes;
+    ``cold()`` uncached when any stage is cold. ``derive`` may return one relation or a tuple; each
     is cached. A stage whose marker vanished after the check (a recommit
     in progress) is served uncached."""
     paths = tuple(_warm_path(sf_dir, st) for st in stages)
@@ -528,7 +534,7 @@ def warm_cached(
     commits = tuple(_commit(p) for p in paths)
     if None in commits:
         return derive(*(read_stage(spark, p) for p in paths))
-    key = (spark, paths)
+    key = (spark, name, paths)
     with _SERVING_LOCK:
         hit = _SERVING.get(key)
         if hit is not None and hit[0] == commits:
@@ -570,7 +576,12 @@ def papers_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     /papers): the ``papers`` checkpoint from the serving cache when warm,
     papers_build otherwise."""
     return warm_cached(
-        spark, sf_dir, ("papers",), lambda papers: papers, lambda: papers_build(spark, sf_dir)
+        spark,
+        sf_dir,
+        "papers",
+        ("papers",),
+        lambda papers: papers,
+        lambda: papers_build(spark, sf_dir),
     )
 
 
@@ -813,6 +824,7 @@ def chunk_entities_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     return warm_cached(
         spark,
         sf_dir,
+        "chunk_entities",
         ("chunks",),
         lambda chunks: _chunk_entities(
             chunks.select("chunk_id", "paper_id", "chunk_index", "text_content")
@@ -1222,14 +1234,18 @@ def _kg_relations(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFram
     return warm_cached(
         spark,
         sf_dir,
+        "kg_relations",
         ("kg_nodes", "kg_edges"),
-        lambda nodes, edges: (
-            edges.groupBy("source_node_id", "target_node_id").agg(
-                F.sum("weight").alias("weight")
-            ),
-            nodes.select("node_id", "name_normalized", "name"),
-        ),
+        _kg_relations_warm,
         lambda: _kg_relations_cold(spark, sf_dir),
+    )
+
+
+def _kg_relations_warm(nodes: DataFrame, edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """``_kg_relations`` over the kg_nodes/kg_edges checkpoints."""
+    return (
+        edges.groupBy("source_node_id", "target_node_id").agg(F.sum("weight").alias("weight")),
+        nodes.select("node_id", "name_normalized", "name"),
     )
 
 
@@ -1242,6 +1258,50 @@ def _kg_relations_cold(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Dat
     return edges, _kg_firsts(chunk_entities_df(spark, sf_dir))
 
 
+def _kg_neighbors(edges: DataFrame, firsts: DataFrame) -> DataFrame:
+    """Every node's named 1-hop neighbors in both directions (the
+    tools.py:182-217 neighborhood before its target filter):
+    ``name_normalized, entity_name, neighbor_name, relation_type,
+    weight, direction``. An edge src -> tgt is an ``out`` row of src
+    and an ``in`` row of tgt (exploded map-side, so the edges are read
+    once); a null weight reads 1.0 (tools.py:211)."""
+    oriented = edges.selectExpr(
+        """explode(array(
+             struct(source_node_id AS node_id, target_node_id AS nbr_id, 'out' AS direction),
+             struct(target_node_id AS node_id, source_node_id AS nbr_id, 'in' AS direction)
+           )) AS o""",
+        "coalesce(weight, 1.0D) AS weight",
+    ).select("o.*", "weight")
+    named = firsts.select("node_id", "name_normalized", F.col("name").alias("entity_name"))
+    nbrs = firsts.select(F.col("node_id").alias("nbr_id"), F.col("name").alias("neighbor_name"))
+    return (
+        oriented.join(named, "node_id")
+        .join(nbrs, "nbr_id")
+        .select(
+            "name_normalized",
+            "entity_name",
+            "neighbor_name",
+            F.lit("CO_OCCURS").alias("relation_type"),
+            "weight",
+            "direction",
+        )
+    )
+
+
+def kg_neighbors_source(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``_kg_neighbors`` for the KG tool: from the serving cache over the
+    kg_nodes/kg_edges checkpoints when warm (keyed on their commits, like
+    ``_kg_relations``), derived uncached otherwise."""
+    return warm_cached(
+        spark,
+        sf_dir,
+        "kg_neighbors",
+        ("kg_nodes", "kg_edges"),
+        lambda nodes, edges: _kg_neighbors(*_kg_relations_warm(nodes, edges)),
+        lambda: _kg_neighbors(*_kg_relations_cold(spark, sf_dir)),
+    )
+
+
 def kg_neighborhood_for(
     spark: SparkSession,
     sf_dir: str,
@@ -1250,46 +1310,18 @@ def kg_neighborhood_for(
 ) -> DataFrame:
     """Parameterized bidirectional 1-hop neighborhood (tools.py:182-217):
     the entity list is normalized with the ingestion contract and applied
-    as the IN-list target filter — the agent façade passes the entities it
-    extracted from the user's question (tool-3 contract)."""
+    as the IN-list filter on ``kg_neighbors_source`` — the agent façade
+    passes the entities it extracted from the user's question (tool-3
+    contract). Warm, a call is one filter-sort-limit job over the cached
+    neighbor relation."""
     from ..functions.text import normalize_entity_py
 
     normed = [normalize_entity_py(e) for e in entities]
     normed = [e for e in normed if len(e) >= KG_MIN_NAME_LENGTH]
-    edges, firsts = _kg_relations(spark, sf_dir)
-    targets = firsts.filter(F.col("name_normalized").isin(normed)).select(
-        "node_id", "name"
-    )
-    n2 = firsts.select(
-        F.col("node_id").alias("n2_id"), F.col("name").alias("neighbor_name")
-    )
-    out = (
-        F.broadcast(targets)
-        .join(edges, targets.node_id == edges.source_node_id)
-        .join(n2, edges.target_node_id == F.col("n2_id"))
-        .select(
-            F.col("name").alias("entity_name"),
-            "neighbor_name",
-            F.lit("CO_OCCURS").alias("relation_type"),
-            "weight",
-            F.lit("out").alias("direction"),
-        )
-    )
-    inc = (
-        F.broadcast(targets)
-        .join(edges, targets.node_id == edges.target_node_id)
-        .join(n2, edges.source_node_id == F.col("n2_id"))
-        .select(
-            F.col("name").alias("entity_name"),
-            "neighbor_name",
-            F.lit("CO_OCCURS").alias("relation_type"),
-            "weight",
-            F.lit("in").alias("direction"),
-        )
-    )
     return (
-        out.unionAll(inc)
-        .withColumn("weight", F.coalesce("weight", F.lit(1.0)))
+        kg_neighbors_source(spark, sf_dir)
+        .filter(F.col("name_normalized").isin(normed))
+        .drop("name_normalized")
         .orderBy(F.desc("weight"), "entity_name", "neighbor_name", "direction")
         .limit(limit)
     )
@@ -1339,13 +1371,16 @@ def kg_neighborhood_for(
 def kg_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's KG retrieval (tools.py:182-217): CTE-factored
     IN-list target selection (P5), bidirectional 1-hop joins (J2/J3)
-    merged with UNION ALL (SET1), null weight → 1.0 coalesce
+    with both directions from one map-side explode (the reference's
+    UNION ALL, SET1, kept in the oracle), null weight → 1.0 coalesce
     (tools.py:211), LIMIT k. Aggregated edge weights (paper dimension
     summed out via COUNT over all pairs) keep the query deterministic.
 
-    Scale shape: target_nodes is tiny (IN-list) → broadcast to both
-    direction joins; edges shuffle once on the join key. Reads the
-    materialized kg_nodes/kg_edges checkpoints when warm (_kg_relations).
+    Scale shape: the edges are read once and exploded map-side into
+    both directions; the IN-list filter reaches the target-name side of
+    the naming join. Reads the materialized kg_nodes/kg_edges
+    checkpoints when warm, through the cached neighbor relation
+    (``kg_neighbors_source``).
     """
     return kg_neighborhood_for(spark, sf_dir, KG_QUERY_ENTITIES, limit=25)
 

@@ -5,8 +5,8 @@ The reference serves its agent over FastAPI: ``GET /`` welcome,
 frontend's JSON shape (backend/app.py:79-110), ``POST /reset`` clearing
 conversation history (backend/app.py:112-119), ``GET /papers`` dumping
 the papers table (backend/app.py:122-136), ``GET /health``
-(backend/app.py:138-139), and an append-only ``history.json`` log of
-every query (backend/app.py:42-71).
+(backend/app.py:138-139), and an append-only history log of every
+query (backend/app.py:42-71), kept as JSON lines.
 
 FastAPI is not available in this environment, so the app is a plain
 WSGI callable (stdlib ``wsgiref`` serves it; any WSGI server would).
@@ -18,7 +18,7 @@ mirrors backend/app.py:24 — one agent, shared history across requests.
 With a warm warehouse, ``GET /papers`` and the agent's tools are served
 from Spark-cached relations (pipeline/corpus.py, ``warm_cached``): the
 papers table, the chunk table joined with titles (about one copy of the
-chunk table in memory) and the aggregated KG edges. Each is refreshed
+chunk table in memory) and the KG neighbor relation. Each is refreshed
 when a warehouse stage it reads is recommitted, by this process or
 another. With a cold warehouse the routes derive per request, as
 before, and the serving cache holds nothing.
@@ -151,26 +151,33 @@ document.getElementById('reset').addEventListener('click', async () => {
 def save_to_history(
     history_path: str, query_text: str, answer: str, citations: list
 ) -> None:
-    """Append-only JSON history log (backend/app.py:42-71): load existing
-    (tolerating a corrupt file), append the new entry, rewrite."""
+    """Append one entry to the query history (backend/app.py:42-71): one
+    JSON line, written in one append-mode write plus a flush, so a
+    request costs O(entry), not O(history), and concurrent requests
+    never interleave or drop lines. Read it with ``read_history``."""
     os.makedirs(os.path.dirname(history_path) or ".", exist_ok=True)
-    entries: list = []
-    if os.path.exists(history_path):
-        try:
-            with open(history_path, encoding="utf-8") as f:
-                entries = json.load(f)
-        except json.JSONDecodeError:
-            entries = []
-    entries.append(
-        {
-            "timestamp": datetime.now().isoformat(),
-            "query": query_text,
-            "answer": answer,
-            "chunks": citations,
-        }
-    )
-    with open(history_path, "w", encoding="utf-8") as f:
-        json.dump(entries, f, indent=4, ensure_ascii=False, default=str)
+    entry = {
+        "timestamp": datetime.now().isoformat(),
+        "query": query_text,
+        "answer": answer,
+        "chunks": citations,
+    }
+    line = json.dumps(entry, ensure_ascii=False, default=str) + "\n"
+    with open(history_path, "ab") as f:
+        f.write(line.encode("utf-8"))
+        f.flush()
+
+
+def read_history(history_path: str) -> list[dict]:
+    """The entries ``save_to_history`` appended, oldest first. A last
+    line without its newline was torn by a crash mid-write and is
+    skipped; any other undecodable line raises."""
+    if not os.path.exists(history_path):
+        return []
+    with open(history_path, encoding="utf-8") as f:
+        lines = f.read().split("\n")
+    # the text after the last newline is "" or a torn entry
+    return [json.loads(line) for line in lines[:-1]]
 
 
 def create_app(
@@ -183,7 +190,7 @@ def create_app(
     substitution); default is the reference's global-agent idiom."""
     agent = agent or ResearchAgent(spark, sf_dir)
     history_path = history_path or os.path.join(
-        tempfile.gettempdir(), "cs5542_history.json"
+        tempfile.gettempdir(), "cs5542_history.jsonl"
     )
 
     def _json(start_response, status: str, payload: Any) -> list[bytes]:

@@ -36,6 +36,30 @@ def test_search_papers_tool(spark, sf_dir):
     assert scores == sorted(scores, reverse=True)
 
 
+def test_cosine_score_const_matches_cosine_score(spark):
+    """search_papers' one-expression score equals ``cosine_score`` over
+    the same float-rounded query literal, bit for bit, including query
+    components whose ``repr`` is in exponent form or a negative zero."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from cs_5542_lab_6_spark.functions.vectors import cosine_score, cosine_score_const
+
+    rng = random.Random(5)
+    q = [rng.uniform(-1, 1) for _ in range(60)] + [1e-05, -3.5e-07, -0.0, 2.5e20]
+    df = spark.createDataFrame(
+        [([rng.uniform(-1, 1) for _ in q],) for _ in range(40)], "embedding ARRAY<FLOAT>"
+    )
+    qcol = F.array(*[F.lit(x) for x in q]).cast("array<float>")
+    for d in (4, 12):
+        got = df.select(
+            cosine_score_const("embedding", q, d).alias("a"),
+            cosine_score(F.col("embedding"), qcol, d).alias("b"),
+        ).collect()
+        assert [r.a for r in got] == [r.b for r in got]
+
+
 def test_summarize_context_deterministic():
     chunks = [
         {"chunk_id": "c1", "paper_id": "doc_1", "title": "Document 1",

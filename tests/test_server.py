@@ -11,7 +11,7 @@ import os
 import pytest
 
 from cs_5542_lab_6_spark.agent_loop import ResearchAgent
-from cs_5542_lab_6_spark.server import create_app
+from cs_5542_lab_6_spark.server import create_app, read_history, save_to_history
 
 
 class Client:
@@ -93,17 +93,60 @@ def test_query_requires_question(client):
 
 
 def test_history_log_appends(client):
-    """Every successful /query appends one history.json entry with the
+    """Every successful /query appends one history entry with the
     timestamp/query/answer/chunks shape (backend/app.py:42-71)."""
     c, _, hist = client
-    with open(hist, encoding="utf-8") as f:
-        before = len(json.load(f))
+    before = len(read_history(hist))
     c.request("POST", "/query", {"question": "entity graphs"})
-    with open(hist, encoding="utf-8") as f:
-        entries = json.load(f)
+    entries = read_history(hist)
     assert len(entries) == before + 1
     assert set(entries[-1]) == {"timestamp", "query", "answer", "chunks"}
     assert entries[-1]["query"] == "entity graphs"
+
+
+class _EchoAgent:
+    """An agent that answers without Spark, citing one chunk of
+    ``text_bytes`` characters, so a history line spans many write
+    buffers."""
+
+    def __init__(self, text_bytes: int):
+        self.text = "x" * text_bytes
+
+    def run(self, question: str) -> dict:
+        cite = {"chunk_id": question, "score": 0.5, "text": self.text}
+        return {"answer": question, "citations": [cite], "tools_used": [], "steps": 0}
+
+    def reset_history(self) -> None:
+        pass
+
+
+def test_concurrent_queries_lose_no_history_lines(spark, sf_dir, tmp_path):
+    """/query requests served from many threads at once each append
+    their entry, whole: none is lost or interleaved with another."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    hist = str(tmp_path / "history.jsonl")
+    agent = _EchoAgent(text_bytes=40_000)
+    c = Client(create_app(spark, sf_dir, agent=agent, history_path=hist))
+    questions = [f"question {i}" for i in range(64)]
+    with ThreadPoolExecutor(max_workers=8) as pool:
+        statuses = list(pool.map(lambda q: c.request("POST", "/query", {"question": q})[0], questions))
+    assert statuses == [200] * len(questions)
+    entries = read_history(hist)
+    assert sorted(e["query"] for e in entries) == sorted(questions)
+    assert all(e["chunks"][0]["text"] == agent.text for e in entries)
+
+
+def test_history_reader_skips_a_torn_last_line(tmp_path):
+    """A crash mid-append leaves a last line without its newline: the
+    reader returns the complete entries before it."""
+    hist = str(tmp_path / "history.jsonl")
+    save_to_history(hist, "first", "a1", [])
+    save_to_history(hist, "second", "a2", [{"chunk_id": "c1"}])
+    with open(hist, "ab") as f:
+        f.write(b'{"timestamp": "2026-01-01T00:00:00", "query": "thi')
+    assert [e["query"] for e in read_history(hist)] == ["first", "second"]
+    assert read_history(str(tmp_path / "absent.jsonl")) == []
 
 
 def test_reset_clears_agent_history(client):
@@ -306,7 +349,7 @@ def test_warm_papers_refresh_on_stage_recommit(spark, sf_dir, tmp_path, monkeypa
 
     clear_caches(spark)
     assert titles()["doc_1"] == "Rewritten 1"
-    (papers,) = C._SERVING[(spark, (str(stage),))][1]
+    (papers,) = C._SERVING[(spark, "papers", (str(stage),))][1]
     assert papers.storageLevel.useMemory  # refilled after clear_caches
     clear_caches(spark)
 
@@ -411,3 +454,80 @@ def test_read_stage_names_a_changed_type(spark, built_papers, tmp_path):
         C.read_stage(spark, str(stage)).collect()
     assert "title" in str(err.value)
     assert str(stage) in str(err.value)
+
+
+@pytest.fixture(scope="module")
+def tool_warehouse(spark, sf_dir, tmp_path_factory):
+    """A warehouse root holding the committed stages the agent tools
+    read, built once."""
+    from cs_5542_lab_6_spark.pipeline import ingest as I
+
+    root = tmp_path_factory.mktemp("tools_wh")
+    stages = ("papers", "chunks", "kg_nodes", "kg_edges")
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(I, "STAGES", tuple(s for s in I.STAGES if s[0] in stages))
+        I.build_corpus(spark, sf_dir, str(root / os.path.basename(sf_dir.rstrip("/"))), resume=False)
+    return root
+
+
+def test_warm_tool_call_runs_one_job(spark, sf_dir, tool_warehouse, monkeypatch):
+    """Once a warm tool's relation is cached, each further call is one
+    Spark job: the scored top-k of search_papers, a get_paper_details
+    lookup whether the paper exists or not, and the filtered top-k of
+    search_knowledge_graph."""
+    from cs_5542_lab_6_spark import agent_api as A
+    from cs_5542_lab_6_spark.pipeline import corpus as C
+    from cs_5542_lab_6_spark.session import clear_caches
+
+    monkeypatch.setenv(C.WAREHOUSE_ENV, str(tool_warehouse))
+    calls = {
+        "search_papers": (lambda: A.search_papers(spark, sf_dir, "distributed join performance"), 5),
+        "details_hit": (lambda: A.get_paper_details(spark, sf_dir, "doc_42"), 1),
+        "details_miss": (lambda: A.get_paper_details(spark, sf_dir, "doc_none"), 0),
+        "search_knowledge_graph": (
+            lambda: A.search_knowledge_graph(spark, sf_dir, ["spark", "join"], top_k=10),
+            10,
+        ),
+    }
+    sc = spark.sparkContext
+    jobs, rows = {}, {}
+    try:
+        for name, (call, _) in calls.items():
+            call().collect()  # derives and caches the tool's relation
+            group = f"warm_tool_{name}"
+            sc.setJobGroup(group, group)
+            try:
+                rows[name] = len(call().collect())
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        clear_caches(spark)
+    assert rows == {name: n for name, (_, n) in calls.items()}
+    assert jobs == {name: 1 for name in calls}
+
+
+def test_kg_serving_relations_do_not_alias(spark, sf_dir, tool_warehouse, monkeypatch):
+    """The KG tool's neighbor relation and ``_kg_relations`` (edges and
+    names, which evaluation reads) derive from the same two stages and
+    are cached apart: in one warm session each returns its own columns,
+    and the warm neighborhood equals the cold one."""
+    from cs_5542_lab_6_spark.pipeline import corpus as C
+    from cs_5542_lab_6_spark.session import clear_caches
+
+    monkeypatch.setenv(C.WAREHOUSE_ENV, str(tool_warehouse))
+    cols = ["entity_name", "neighbor_name", "relation_type", "weight", "direction"]
+    try:
+        first = C.kg_neighborhood_for(spark, sf_dir, ["Spark", "filter"], limit=40)
+        edges, firsts = C._kg_relations(spark, sf_dir)
+        again = C.kg_neighborhood_for(spark, sf_dir, ["Spark", "filter"], limit=40)
+        assert edges.columns == ["source_node_id", "target_node_id", "weight"]
+        assert firsts.columns == ["node_id", "name_normalized", "name"]
+        assert first.columns == again.columns == cols
+        warm = again.collect()
+        assert warm == first.collect()
+        assert {r.entity_name.lower() for r in warm} == {"spark", "filter"}
+    finally:
+        clear_caches(spark)
+    monkeypatch.delenv(C.WAREHOUSE_ENV)
+    assert C.kg_neighborhood_for(spark, sf_dir, ["Spark", "filter"], limit=40).collect() == warm

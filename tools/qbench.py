@@ -5,11 +5,14 @@ Mirrors bench.py methodology (warm warehouse, noop sink, clear_caches
 between runs) on an arbitrary subset of queries:
 
     python tools/qbench.py --runs 3 q1 q2 ...          # time queries
+    python tools/qbench.py --runs 3 --seed 7 q1 q2 ... # another pass order
     python tools/qbench.py --plan-dir /tmp/plans --suffix before q1 ...
                                                        # dump explain()
 
-Intended for the inner optimization loop only; bench.py remains the
-official artifact producer.
+Each timed pass runs the queries in a fresh order, shuffled from
+``--seed`` and printed to stderr, so no query is always timed after
+the same neighbours. Intended for the inner optimization loop only;
+bench.py remains the official artifact producer.
 """
 
 from __future__ import annotations
@@ -17,6 +20,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import random
 import sys
 import time
 
@@ -31,6 +35,8 @@ def main() -> None:
     ap.add_argument("--runs", type=int, default=3)
     ap.add_argument("--plan-dir", default=None)
     ap.add_argument("--suffix", default="before")
+    ap.add_argument("--seed", type=int, default=0,
+                    help="seed of the per-pass query order")
     ap.add_argument("--no-build", action="store_true",
                     help="assume the warm warehouse already exists")
     ap.add_argument("--cold", action="store_true",
@@ -116,10 +122,13 @@ def main() -> None:
         spark.stop()
         return
 
-    # interleaved passes, bench.py-style
+    # interleaved passes, bench.py-style, each in a seeded shuffled order
     all_runs: dict[str, list[float]] = {n: [] for n in names}
-    for _ in range(args.runs):
-        for name in names:
+    rng = random.Random(args.seed)
+    for i in range(args.runs):
+        order = rng.sample(names, len(names))
+        print(f"pass {i} order: {' '.join(order)}", file=sys.stderr)
+        for name in order:
             spark.sparkContext.setJobDescription(f"qbench:{name}")
             t0 = time.perf_counter()
             queries[name](spark, SF_DIR).write.format("noop").mode(
