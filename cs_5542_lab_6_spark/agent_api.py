@@ -78,7 +78,6 @@ def retrieval_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     return warm_cached(
         spark,
         sf_dir,
-        "retrieval",
         ("chunks", "papers"),
         _retrieval,
         lambda: _retrieval(chunks_source(spark, sf_dir), papers_build(spark, sf_dir)),

@@ -370,22 +370,22 @@ def chunks_with_embeddings_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Serving cache (``warm_cached``): the research-assistant tools go one
 # step further, like the reference's once-per-agent chunk fetch. Five
 # relations derived from warm stages are held in Spark's cache, one per
-# (session, relation name, stage paths): the retrieval relation (chunks
-# ⋈ paper titles, agent_api), the papers relation (``papers_source``),
-# the KG query relations (``_kg_relations``: aggregated edges and node
-# names), the KG tool's neighbor relation (``_kg_neighbors``: every
-# node's named 1-hop neighbors in both directions, so a tool call is a
-# filter over one cached relation) and the entity mentions the KG
-# builders share (``chunk_entities_df``). Each is keyed on its stages'
-# _SUCCESS commits, so a rebuild — in this process or another —
-# unpersists the old relation and the next call derives and caches the
-# new one; a bare ``.cache()`` would not do, since Spark's CacheManager
-# matches plans by path and keeps serving the old commit's rows. The
-# cold path never goes through this cache (the registry's cold
-# derivations are as before). Memory: about one copy of the chunk table
-# (text + embedding), plus the much smaller papers table, aggregated KG
-# edges and neighbor rows (two per edge), held MEMORY_AND_DISK so
-# pressure spills rather than fails.
+# (session, stage paths): the retrieval relation (chunks ⋈ paper titles,
+# agent_api), the papers relation (``papers_source``), the KG node names
+# (``_kg_names``), the KG tool's neighbor relation
+# (``kg_neighbors_source``: every node's named 1-hop neighbors in both
+# directions, so a tool call is a filter over one cached relation) and
+# the entity mentions the KG builders share (``chunk_entities_df``). No
+# two read the same stages, so the stage paths name the relation. Each
+# is keyed on its stages' _SUCCESS commits, so a rebuild — in this
+# process or another — unpersists the old relation and the next call
+# derives and caches the new one; a bare ``.cache()`` would not do,
+# since Spark's CacheManager matches plans by path and keeps serving the
+# old commit's rows. The cold path never goes through this cache (the
+# registry's cold derivations are as before). Memory: about one copy of
+# the chunk table (text + embedding), plus the much smaller papers
+# table, node names and neighbor rows (two per aggregated edge), held
+# MEMORY_AND_DISK so pressure spills rather than fails.
 
 WAREHOUSE_ENV = "SPARK_GRAFT_WAREHOUSE"
 
@@ -507,9 +507,8 @@ def read_stage(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(STAGE_SCHEMAS[stage]).parquet(path).select(*cols)
 
 
-# (session, relation name, stage paths) -> (their commits, the cached
-# relations); the lock makes check-commit-then-replace atomic under a
-# threaded server.
+# (session, stage paths) -> (their commits, the cached relations); the
+# lock makes check-commit-then-replace atomic under a threaded server.
 _SERVING: dict[tuple, tuple[tuple, tuple[DataFrame, ...]]] = {}
 _SERVING_LOCK = threading.Lock()
 
@@ -517,15 +516,14 @@ _SERVING_LOCK = threading.Lock()
 def warm_cached(
     spark: SparkSession,
     sf_dir: str,
-    name: str,
     stages: tuple[str, ...],
     derive: Callable[..., DataFrame | tuple[DataFrame, ...]],
     cold: Callable[[], DataFrame | tuple[DataFrame, ...]],
 ) -> DataFrame | tuple[DataFrame, ...]:
-    """The serving cache (see the block comment above): relation
-    ``name``, ``derive`` over the warm ``stages`` (one ``read_stage``
-    each, in order), cached and reused until a stage's commit changes;
-    ``cold()`` uncached when any stage is cold. ``derive`` may return one relation or a tuple; each
+    """The serving cache (see the block comment above): ``derive`` over
+    the warm ``stages`` (one ``read_stage`` each, in order), cached and
+    reused until a stage's commit changes; ``cold()`` uncached when any
+    stage is cold. ``derive`` may return one relation or a tuple; each
     is cached. A stage whose marker vanished after the check (a recommit
     in progress) is served uncached."""
     paths = tuple(_warm_path(sf_dir, st) for st in stages)
@@ -534,7 +532,7 @@ def warm_cached(
     commits = tuple(_commit(p) for p in paths)
     if None in commits:
         return derive(*(read_stage(spark, p) for p in paths))
-    key = (spark, name, paths)
+    key = (spark, paths)
     with _SERVING_LOCK:
         hit = _SERVING.get(key)
         if hit is not None and hit[0] == commits:
@@ -576,12 +574,7 @@ def papers_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     /papers): the ``papers`` checkpoint from the serving cache when warm,
     papers_build otherwise."""
     return warm_cached(
-        spark,
-        sf_dir,
-        "papers",
-        ("papers",),
-        lambda papers: papers,
-        lambda: papers_build(spark, sf_dir),
+        spark, sf_dir, ("papers",), lambda papers: papers, lambda: papers_build(spark, sf_dir)
     )
 
 
@@ -824,7 +817,6 @@ def chunk_entities_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     return warm_cached(
         spark,
         sf_dir,
-        "chunk_entities",
         ("chunks",),
         lambda chunks: _chunk_entities(
             chunks.select("chunk_id", "paper_id", "chunk_index", "text_content")
@@ -1220,42 +1212,19 @@ def _kg_node_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     return chunk_entities_df(spark, sf_dir).select("node_id").distinct()
 
 
-def _kg_relations(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """(edges, firsts) for the KG query layer.
-
-    edges: undirected co-occurrence weights aggregated over papers
-    (src < tgt canonical); firsts: (node_id, name_normalized, name) with
-    first-writer-wins naming (M7). Served from the serving cache over the
-    kg_nodes/kg_edges warehouse checkpoints when warm — summing the
-    per-paper checkpoint weights gives exactly the cold path's pair
-    counts — and derived from raw text otherwise (the reference
-    re-queries its warehouse the same way, tools.py:182-217, rather than
-    re-running NER per query)."""
+def _kg_names(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The KG's node names, (node_id, name_normalized, name) with
+    first-writer-wins naming (M7): from the serving cache over the
+    kg_nodes checkpoint when warm, derived from raw text otherwise (the
+    reference re-queries its warehouse the same way, tools.py:182-217,
+    rather than re-running NER per query)."""
     return warm_cached(
         spark,
         sf_dir,
-        "kg_relations",
-        ("kg_nodes", "kg_edges"),
-        _kg_relations_warm,
-        lambda: _kg_relations_cold(spark, sf_dir),
+        ("kg_nodes",),
+        lambda nodes: nodes.select("node_id", "name_normalized", "name"),
+        lambda: _kg_firsts(chunk_entities_df(spark, sf_dir)),
     )
-
-
-def _kg_relations_warm(nodes: DataFrame, edges: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """``_kg_relations`` over the kg_nodes/kg_edges checkpoints."""
-    return (
-        edges.groupBy("source_node_id", "target_node_id").agg(F.sum("weight").alias("weight")),
-        nodes.select("node_id", "name_normalized", "name"),
-    )
-
-
-def _kg_relations_cold(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    edges = (
-        _kg_pairs(spark, sf_dir)
-        .groupBy(F.col("src").alias("source_node_id"), F.col("tgt").alias("target_node_id"))
-        .agg(F.sum("weight").alias("weight"))
-    )
-    return edges, _kg_firsts(chunk_entities_df(spark, sf_dir))
 
 
 def _kg_neighbors(edges: DataFrame, firsts: DataFrame) -> DataFrame:
@@ -1289,16 +1258,25 @@ def _kg_neighbors(edges: DataFrame, firsts: DataFrame) -> DataFrame:
 
 
 def kg_neighbors_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``_kg_neighbors`` for the KG tool: from the serving cache over the
-    kg_nodes/kg_edges checkpoints when warm (keyed on their commits, like
-    ``_kg_relations``), derived uncached otherwise."""
+    """``_kg_neighbors`` for the KG tool, over the co-occurrence weights
+    aggregated over papers: from the serving cache over the
+    kg_nodes/kg_edges checkpoints when warm (summing the per-paper
+    checkpoint weights gives exactly the cold path's pair counts),
+    derived uncached from raw text otherwise."""
     return warm_cached(
         spark,
         sf_dir,
-        "kg_neighbors",
         ("kg_nodes", "kg_edges"),
-        lambda nodes, edges: _kg_neighbors(*_kg_relations_warm(nodes, edges)),
-        lambda: _kg_neighbors(*_kg_relations_cold(spark, sf_dir)),
+        lambda nodes, edges: _kg_neighbors(
+            edges.groupBy("source_node_id", "target_node_id").agg(F.sum("weight").alias("weight")),
+            nodes,
+        ),
+        lambda: _kg_neighbors(
+            _kg_pairs(spark, sf_dir)
+            .groupBy(F.col("src").alias("source_node_id"), F.col("tgt").alias("target_node_id"))
+            .agg(F.sum("weight").alias("weight")),
+            _kg_firsts(chunk_entities_df(spark, sf_dir)),
+        ),
     )
 
 

@@ -34,7 +34,7 @@ from ..registry import query
 from .corpus import (
     _CORPUS_CTES,
     KG_MIN_NAME_LENGTH,
-    _kg_relations,
+    _kg_names,
     _kg_und_occurrences,
     _stage_or,
     chunk_entities_df,
@@ -218,7 +218,7 @@ def eval_rag_comparison(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     nseed = seeds.groupBy("qid").agg(F.count("*").alias("n_seed"))
-    _, firsts = _kg_relations(spark, sf_dir)
+    firsts = _kg_names(spark, sf_dir)
     seed_nodes = (
         F.broadcast(seeds)
         .join(firsts, "name_normalized")
@@ -227,10 +227,10 @@ def eval_rag_comparison(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # 1-hop neighbors from the UNAGGREGATED both-orientation occurrence
     # relation (one kg_edges scan via map-side orientation explode, r16):
-    # `related` only needs DISTINCT neighbor ids, so the per-(src,tgt)
-    # weight aggregation the old `_kg_relations().edges` paid — twice,
-    # once per orientation branch — was a pure extra shuffle; the final
-    # .distinct() below is the only dedup the semantics need.
+    # `related` only needs DISTINCT neighbor ids, so a per-(src,tgt)
+    # weight aggregation — twice, once per orientation branch — would be
+    # a pure extra shuffle; the final .distinct() below is the only
+    # dedup the semantics need.
     und = _kg_und_occurrences(spark, sf_dir)
     related = (
         seed_nodes.unionAll(

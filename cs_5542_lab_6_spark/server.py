@@ -162,22 +162,32 @@ def save_to_history(
         "answer": answer,
         "chunks": citations,
     }
-    line = json.dumps(entry, ensure_ascii=False, default=str) + "\n"
-    with open(history_path, "ab") as f:
-        f.write(line.encode("utf-8"))
+    data = (json.dumps(entry, ensure_ascii=False, default=str) + "\n").encode("utf-8")
+    with open(history_path, "a+b") as f:
+        end = f.seek(0, os.SEEK_END)
+        if end and os.pread(f.fileno(), 1, end - 1) != b"\n":
+            # a crash tore the last entry: end its line so this entry
+            # starts its own (at worst, racing an append in progress,
+            # this leaves a blank line)
+            data = b"\n" + data
+        f.write(data)
         f.flush()
 
 
 def read_history(history_path: str) -> list[dict]:
-    """The entries ``save_to_history`` appended, oldest first. A last
-    line without its newline was torn by a crash mid-write and is
-    skipped; any other undecodable line raises."""
+    """The entries ``save_to_history`` appended, oldest first. A line
+    that does not decode (an entry torn by a crash mid-write, or a
+    blank line) is skipped."""
     if not os.path.exists(history_path):
         return []
-    with open(history_path, encoding="utf-8") as f:
-        lines = f.read().split("\n")
-    # the text after the last newline is "" or a torn entry
-    return [json.loads(line) for line in lines[:-1]]
+    entries = []
+    with open(history_path, "rb") as f:
+        for line in f:
+            try:
+                entries.append(json.loads(line))
+            except ValueError:
+                continue
+    return entries
 
 
 def create_app(

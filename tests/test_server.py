@@ -137,15 +137,20 @@ def test_concurrent_queries_lose_no_history_lines(spark, sf_dir, tmp_path):
     assert all(e["chunks"][0]["text"] == agent.text for e in entries)
 
 
-def test_history_reader_skips_a_torn_last_line(tmp_path):
-    """A crash mid-append leaves a last line without its newline: the
-    reader returns the complete entries before it."""
+def test_history_survives_a_torn_line(tmp_path):
+    """A crash mid-append leaves a last line without its newline (here
+    cut inside a multi-byte character): the reader skips it, and the
+    next append starts a line of its own, so the complete entries before
+    and after the fragment all read back."""
     hist = str(tmp_path / "history.jsonl")
     save_to_history(hist, "first", "a1", [])
     save_to_history(hist, "second", "a2", [{"chunk_id": "c1"}])
     with open(hist, "ab") as f:
-        f.write(b'{"timestamp": "2026-01-01T00:00:00", "query": "thi')
+        f.write('{"timestamp": "2026-01-01T00:00:00", "query": "thé'.encode()[:-1])
     assert [e["query"] for e in read_history(hist)] == ["first", "second"]
+    save_to_history(hist, "third", "a3", [])
+    save_to_history(hist, "fourth", "a4", [])
+    assert [e["query"] for e in read_history(hist)] == ["first", "second", "third", "fourth"]
     assert read_history(str(tmp_path / "absent.jsonl")) == []
 
 
@@ -349,7 +354,7 @@ def test_warm_papers_refresh_on_stage_recommit(spark, sf_dir, tmp_path, monkeypa
 
     clear_caches(spark)
     assert titles()["doc_1"] == "Rewritten 1"
-    (papers,) = C._SERVING[(spark, "papers", (str(stage),))][1]
+    (papers,) = C._SERVING[(spark, (str(stage),))][1]
     assert papers.storageLevel.useMemory  # refilled after clear_caches
     clear_caches(spark)
 
@@ -508,10 +513,10 @@ def test_warm_tool_call_runs_one_job(spark, sf_dir, tool_warehouse, monkeypatch)
 
 
 def test_kg_serving_relations_do_not_alias(spark, sf_dir, tool_warehouse, monkeypatch):
-    """The KG tool's neighbor relation and ``_kg_relations`` (edges and
-    names, which evaluation reads) derive from the same two stages and
-    are cached apart: in one warm session each returns its own columns,
-    and the warm neighborhood equals the cold one."""
+    """The KG tool's neighbor relation (over kg_nodes and kg_edges) and
+    the node names ``_kg_names`` serves evaluation (over kg_nodes) are
+    cached apart: in one warm session each returns its own columns, and
+    the warm neighborhood equals the cold one."""
     from cs_5542_lab_6_spark.pipeline import corpus as C
     from cs_5542_lab_6_spark.session import clear_caches
 
@@ -519,10 +524,9 @@ def test_kg_serving_relations_do_not_alias(spark, sf_dir, tool_warehouse, monkey
     cols = ["entity_name", "neighbor_name", "relation_type", "weight", "direction"]
     try:
         first = C.kg_neighborhood_for(spark, sf_dir, ["Spark", "filter"], limit=40)
-        edges, firsts = C._kg_relations(spark, sf_dir)
+        names = C._kg_names(spark, sf_dir)
         again = C.kg_neighborhood_for(spark, sf_dir, ["Spark", "filter"], limit=40)
-        assert edges.columns == ["source_node_id", "target_node_id", "weight"]
-        assert firsts.columns == ["node_id", "name_normalized", "name"]
+        assert names.columns == ["node_id", "name_normalized", "name"]
         assert first.columns == again.columns == cols
         warm = again.collect()
         assert warm == first.collect()

@@ -5,13 +5,13 @@ Mirrors bench.py methodology (warm warehouse, noop sink, clear_caches
 between runs) on an arbitrary subset of queries:
 
     python tools/qbench.py --runs 3 q1 q2 ...          # time queries
-    python tools/qbench.py --runs 3 --seed 7 q1 q2 ... # another pass order
     python tools/qbench.py --plan-dir /tmp/plans --suffix before q1 ...
                                                        # dump explain()
 
-Each timed pass runs the queries in a fresh order, shuffled from
-``--seed`` and printed to stderr, so no query is always timed after
-the same neighbours. Intended for the inner optimization loop only;
+Each timed pass runs the queries in a fresh order, shuffled from a
+fixed seed (the same orders on every invocation, so two trees compare
+like for like) and printed to stderr, so no query is always timed
+after the same neighbours. Intended for the inner optimization loop only;
 bench.py remains the official artifact producer.
 """
 
@@ -35,8 +35,6 @@ def main() -> None:
     ap.add_argument("--runs", type=int, default=3)
     ap.add_argument("--plan-dir", default=None)
     ap.add_argument("--suffix", default="before")
-    ap.add_argument("--seed", type=int, default=0,
-                    help="seed of the per-pass query order")
     ap.add_argument("--no-build", action="store_true",
                     help="assume the warm warehouse already exists")
     ap.add_argument("--cold", action="store_true",
@@ -124,7 +122,7 @@ def main() -> None:
 
     # interleaved passes, bench.py-style, each in a seeded shuffled order
     all_runs: dict[str, list[float]] = {n: [] for n in names}
-    rng = random.Random(args.seed)
+    rng = random.Random(0)
     for i in range(args.runs):
         order = rng.sample(names, len(names))
         print(f"pass {i} order: {' '.join(order)}", file=sys.stderr)
