@@ -15,10 +15,14 @@ relations instead of re-deriving them per call (pipeline/corpus.py,
 titles, with embeddings; about one copy of the chunk table in memory),
 the papers table and the KG neighbor relation (every node's named
 1-hop neighbors in both directions, ``kg_neighbors_source``). Each
-refreshes when a stage it reads is recommitted. A warm tool call is
-then one small Spark job over one cached relation: a scored top-k, a
-top-1 key lookup, or an IN-list filtered top-k. The cold path is never
-served from this cache: cold, every call derives its relations anew.
+refreshes when a stage it reads is recommitted, and holds one partition
+per ``spark.sql.files.maxPartitionBytes`` of the stages it reads (one at
+the benchmark's sizes). A warm tool call is then one Spark job of one
+task over one cached relation: a scored top-k, a top-1 key lookup, or
+an IN-list filtered top-k. The cold path is never served from this
+cache: cold, every call derives its relations anew. The query vector is
+one literal (``functions.vectors.cosine_score``), whatever its
+dimension.
 
 The LLM pieces are deliberately outside the engine (SURVEY §7.3): answer
 synthesis is a *deterministic template renderer* over the collected
@@ -37,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from .functions.embedding import duck_embedding_cte, duck_qvec_sql, embed_query
-from .functions.vectors import cosine_score_const
+from .functions.vectors import cosine_score
 from .pipeline.corpus import (
     _DEFAULT_CHUNKS_SQL,
     chunks_source,
@@ -88,8 +92,8 @@ def search_papers(
     spark: SparkSession, sf_dir: str, question: str, top_k: int = DEFAULT_TOP_K
 ) -> DataFrame:
     """Tool 1 (tools.py:45-92): embed the question driver-side (M3),
-    score every chunk of ``retrieval_source`` JVM-side with one SQL
-    score expression, top-k with deterministic tiebreak. Result keys are
+    score every chunk of ``retrieval_source`` JVM-side against the query
+    as one vector literal, top-k with deterministic tiebreak. Result keys are
     the reference tool contract (tools.py:80-85): chunk_id, paper_id,
     title, section, text, score."""
     return (
@@ -100,7 +104,7 @@ def search_papers(
             "title",
             "section",
             "text",
-            cosine_score_const("embedding", embed_query(question)).alias("score"),
+            cosine_score("embedding", embed_query(question)).alias("score"),
         )
         .orderBy(F.desc("score"), F.asc("chunk_id"))
         .limit(top_k)

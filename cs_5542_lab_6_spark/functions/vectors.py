@@ -54,27 +54,23 @@ def l2_normalize(a: Column | str) -> Column:
     return F.when(n > 0, F.transform(c, lambda x: x / n)).otherwise(c)
 
 
-def cosine_score(emb: Column | str, qvec: Column | str, decimals: int = 4) -> Column:
+def cosine_score(
+    emb: Column | str, qvec: Column | str | Sequence[float], decimals: int = 4
+) -> Column:
     """Rounded cosine score for L2-normalized vectors.
 
     The reference rounds retrieval scores to 4 decimals (tools.py:85);
     rounding also absorbs any sub-ULP fold-order differences so scores are
     stable for hash-checking (SURVEY §4.4 determinism notes).
+
+    ``qvec`` is a vector column or a constant query vector. A constant is
+    built as one literal, rounded through FLOAT like the stored embedding
+    columns it is compared with: the components' ``repr`` (which
+    round-trips a double) comma-joined, split and cast. Catalyst folds
+    that to an array literal, and the plan takes the same few py4j calls
+    whatever the dimension, not one per component.
     """
+    if not isinstance(qvec, (Column, str)):
+        text = ",".join(repr(float(x)) for x in qvec)
+        qvec = F.split(F.lit(text), ",").cast("array<double>").cast("array<float>")
     return F.round(dot(emb, qvec), decimals)
-
-
-def cosine_score_const(emb: str, qvec: Sequence[float], decimals: int = 4) -> Column:
-    """``cosine_score`` of column ``emb`` against a constant query vector,
-    written as one SQL expression: the fold, casts and rounding are the
-    same, so scores are bit-identical, but the plan is built in one
-    parser call instead of one py4j call per component. The query is
-    rounded through FLOAT like the embedding columns it is compared
-    with; each component is an exact ``D``-suffixed double literal
-    (``repr`` round-trips a double)."""
-    lits = ", ".join(f"{float(x)!r}D" for x in qvec)
-    return F.expr(
-        f"round(aggregate(zip_with(CAST({emb} AS ARRAY<DOUBLE>), "
-        f"CAST(CAST(array({lits}) AS ARRAY<FLOAT>) AS ARRAY<DOUBLE>), "
-        f"(x, y) -> x * y), 0.0D, (acc, x) -> acc + x), {decimals})"
-    )

@@ -381,8 +381,15 @@ def chunks_with_embeddings_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 # process or another — unpersists the old relation and the next call
 # derives and caches the new one; a bare ``.cache()`` would not do,
 # since Spark's CacheManager matches plans by path and keeps serving the
-# old commit's rows. The cold path never goes through this cache (the
-# registry's cold derivations are as before). Memory: about one copy of
+# old commit's rows. Each relation is coalesced before it is cached, to
+# one partition per ``spark.sql.files.maxPartitionBytes`` of the
+# committed data files of the stages it reads (at least one), so its
+# partition count grows with its inputs as a large scan's would. At the
+# benchmark's and the test fixtures' sizes that is one partition, so a
+# warm tool call is one job of one task: a scan spreads even a small
+# stage over the cores, and each extra task costs launch and scheduling
+# over a few hundred rows. The cold path never goes through this cache
+# (the registry's cold derivations are as before). Memory: about one copy of
 # the chunk table (text + embedding), plus the much smaller papers
 # table, node names and neighbor rows (two per aggregated edge), held
 # MEMORY_AND_DISK so pressure spills rather than fails.
@@ -507,6 +514,21 @@ def read_stage(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(STAGE_SCHEMAS[stage]).parquet(path).select(*cols)
 
 
+def _serving_partitions(spark: SparkSession, paths: tuple[str, ...]) -> int:
+    """Partitions of a serving-cache relation over the committed stages at
+    ``paths``: one per ``spark.sql.files.maxPartitionBytes`` of their data
+    files, at least one (see the block comment above)."""
+    size = sum(
+        os.path.getsize(os.path.join(d, n))
+        for p in paths
+        for d, _, names in os.walk(p)
+        for n in names
+        if not n.startswith(("_", "."))
+    )
+    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    return max(1, -(-size // split))
+
+
 # (session, stage paths) -> (their commits, the cached relations); the
 # lock makes check-commit-then-replace atomic under a threaded server.
 _SERVING: dict[tuple, tuple[tuple, tuple[DataFrame, ...]]] = {}
@@ -524,7 +546,7 @@ def warm_cached(
     the warm ``stages`` (one ``read_stage`` each, in order), cached and
     reused until a stage's commit changes; ``cold()`` uncached when any
     stage is cold. ``derive`` may return one relation or a tuple; each
-    is cached. A stage whose marker vanished after the check (a recommit
+    is coalesced to ``_serving_partitions`` and cached. A stage whose marker vanished after the check (a recommit
     in progress) is served uncached."""
     paths = tuple(_warm_path(sf_dir, st) for st in stages)
     if not all(paths):
@@ -545,7 +567,10 @@ def warm_cached(
                 for df in hit[1]:
                     df.unpersist()
             out = derive(*(read_stage(spark, p) for p in paths))
-            rels = tuple(df.cache() for df in (out if isinstance(out, tuple) else (out,)))
+            n = _serving_partitions(spark, paths)
+            rels = tuple(
+                df.coalesce(n).cache() for df in (out if isinstance(out, tuple) else (out,))
+            )
             _SERVING[key] = (commits, rels)
     return rels if len(rels) > 1 else rels[0]
 
@@ -632,15 +657,12 @@ def chunk_vector_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.vectors import cosine_score
 
     chunks = chunks_source(spark, sf_dir)
-    qvec = F.array(
-        *[F.lit(x) for x in embed_query(_CVT_QUESTION)]
-    ).cast("array<float>")
     return (
         chunks.select(
             "chunk_id",
             "paper_id",
             "section_name",
-            cosine_score(F.col("embedding"), qvec).alias("score"),
+            cosine_score("embedding", embed_query(_CVT_QUESTION)).alias("score"),
         )
         .orderBy(F.desc("score"), F.asc("chunk_id"))
         .limit(5)
@@ -724,10 +746,7 @@ def late_interaction_for(
     scored = chunks.select(
         "paper_id",
         *[
-            cosine_score(
-                F.col("embedding"),
-                F.array(*[F.lit(x) for x in embed_query(tok)]).cast("array<float>"),
-            ).alias(f"s{i}")
+            cosine_score("embedding", embed_query(tok)).alias(f"s{i}")
             for i, tok in enumerate(terms)
         ],
     )

@@ -20,6 +20,25 @@ on local[N]:
   (``CODEGEN_CACHE_ENTRIES``): a session cycling through more queries
   than Spark's default 100-class LRU holds recompiles every class with
   Janino, and the JIT compiles each new class again.
+- SQL plan descriptions in the simple explain mode
+  (``spark.sql.ui.explainMode=simple``). Spark renders a description of
+  every SQL execution's plan for its UI whether the UI is on or not; the
+  default *formatted* mode (``ExplainUtils``) costs a warm agent tool
+  call about 2 ms of its 50 ms of JVM CPU (4 cores, warm JIT), and its
+  rendering code is JIT-compiled on first use. Given up: with
+  ``$SPARK_GRAFT_UI`` on, the SQL tab shows the simple plan tree
+  instead of the formatted one with per-operator details.
+- PySpark's DataFrame call-site capture off
+  (``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
+  every ``Column`` method and ``F.col`` call walks the Python stack and
+  resolves ``PySparkCurrentOrigin`` through py4j, whose lookup misses
+  scan the classpath jars: per ``F.col`` call, about 1.2 ms wall,
+  1.2 ms JVM CPU and 0.85 ms Python CPU with it on against 0.4, 0.4
+  and 0.2 ms off (2,000 calls, 4 cores). Given up: an error raised
+  from a DataFrame expression no longer names the Python file and line
+  that built it in its query context; the error class and message are
+  unchanged. PySpark reads this conf once per process, at the first
+  ``Column`` call made with an active session.
 """
 
 from __future__ import annotations
@@ -132,6 +151,9 @@ def get_spark(
         # 120s costs nothing when healthy and rides out the noise window.
         .config("spark.python.authenticate.socketTimeout", "120s")
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
+        # --- per-call fixed costs (see the module docstring) -------------
+        .config("spark.sql.ui.explainMode", "simple")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", driver_mem)
     )
     if pretouch:

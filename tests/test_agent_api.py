@@ -36,15 +36,17 @@ def test_search_papers_tool(spark, sf_dir):
     assert scores == sorted(scores, reverse=True)
 
 
-def test_cosine_score_const_matches_cosine_score(spark):
-    """search_papers' one-expression score equals ``cosine_score`` over
-    the same float-rounded query literal, bit for bit, including query
-    components whose ``repr`` is in exponent form or a negative zero."""
+def test_cosine_score_sequence_query_matches_column_query(spark):
+    """A constant query passed as a sequence (one split-and-cast literal,
+    what search_papers, chunk_vector_topk and late_interaction_for use)
+    scores bit for bit like the same float-rounded query built as an
+    array column, including components whose ``repr`` is in exponent
+    form or a negative zero."""
     import random
 
     from pyspark.sql import functions as F
 
-    from cs_5542_lab_6_spark.functions.vectors import cosine_score, cosine_score_const
+    from cs_5542_lab_6_spark.functions.vectors import cosine_score
 
     rng = random.Random(5)
     q = [rng.uniform(-1, 1) for _ in range(60)] + [1e-05, -3.5e-07, -0.0, 2.5e20]
@@ -54,7 +56,7 @@ def test_cosine_score_const_matches_cosine_score(spark):
     qcol = F.array(*[F.lit(x) for x in q]).cast("array<float>")
     for d in (4, 12):
         got = df.select(
-            cosine_score_const("embedding", q, d).alias("a"),
+            cosine_score("embedding", q, d).alias("a"),
             cosine_score(F.col("embedding"), qcol, d).alias("b"),
         ).collect()
         assert [r.a for r in got] == [r.b for r in got]

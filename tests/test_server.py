@@ -477,9 +477,11 @@ def tool_warehouse(spark, sf_dir, tmp_path_factory):
 
 def test_warm_tool_call_runs_one_job(spark, sf_dir, tool_warehouse, monkeypatch):
     """Once a warm tool's relation is cached, each further call is one
-    Spark job: the scored top-k of search_papers, a get_paper_details
-    lookup whether the paper exists or not, and the filtered top-k of
-    search_knowledge_graph."""
+    Spark job of one task: the scored top-k of search_papers, a
+    get_paper_details lookup whether the paper exists or not, and the
+    filtered top-k of search_knowledge_graph. One task because the
+    fixture's stages are far below ``spark.sql.files.maxPartitionBytes``,
+    so each cached relation holds one partition."""
     from cs_5542_lab_6_spark import agent_api as A
     from cs_5542_lab_6_spark.pipeline import corpus as C
     from cs_5542_lab_6_spark.session import clear_caches
@@ -495,7 +497,8 @@ def test_warm_tool_call_runs_one_job(spark, sf_dir, tool_warehouse, monkeypatch)
         ),
     }
     sc = spark.sparkContext
-    jobs, rows = {}, {}
+    tracker = sc.statusTracker()
+    jobs, tasks, rows = {}, {}, {}
     try:
         for name, (call, _) in calls.items():
             call().collect()  # derives and caches the tool's relation
@@ -505,11 +508,53 @@ def test_warm_tool_call_runs_one_job(spark, sf_dir, tool_warehouse, monkeypatch)
                 rows[name] = len(call().collect())
             finally:
                 sc.setLocalProperty("spark.jobGroup.id", None)
-            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+            ids = tracker.getJobIdsForGroup(group)
+            jobs[name] = len(ids)
+            # tasks run, not the stages' numTasks: a job over a cached
+            # relation also lists the stages that filled the cache, skipped
+            tasks[name] = sum(
+                tracker.getStageInfo(s).numCompletedTasks
+                for j in ids
+                for s in tracker.getJobInfo(j).stageIds
+            )
     finally:
         clear_caches(spark)
     assert rows == {name: n for name, (_, n) in calls.items()}
     assert jobs == {name: 1 for name in calls}
+    assert tasks == {name: 1 for name in calls}
+
+
+def test_serving_partitions_follow_stage_bytes(spark, sf_dir, built_papers, tmp_path, monkeypatch):
+    """The serving cache's one-partition relations are a consequence of
+    stage size, not a cap: a stage larger than
+    ``spark.sql.files.maxPartitionBytes`` is served from one partition
+    per that many bytes of its data files, and serves every row."""
+    import shutil
+
+    from cs_5542_lab_6_spark.pipeline import corpus as C
+    from cs_5542_lab_6_spark.session import clear_caches
+
+    root = tmp_path / "wh"
+    stage = root / os.path.basename(sf_dir.rstrip("/")) / "papers"
+    shutil.copytree(built_papers, stage)
+    size = sum(
+        f.stat().st_size
+        for f in stage.rglob("*")
+        if f.is_file() and not f.name.startswith(("_", "."))
+    )
+    monkeypatch.setenv(C.WAREHOUSE_ENV, str(root))
+    conf = "spark.sql.files.maxPartitionBytes"
+    saved = spark.conf.get(conf)
+    spark.conf.set(conf, str(-(-size // 3)))  # the stage is 3 splits
+    try:
+        papers = C.papers_source(spark, sf_dir)
+        parts = papers.rdd.getNumPartitions()
+        served = papers.count()
+    finally:
+        spark.conf.set(conf, saved)
+        clear_caches(spark)
+    assert parts == 3
+    assert served == C.read_stage(spark, str(stage)).count()
 
 
 def test_kg_serving_relations_do_not_alias(spark, sf_dir, tool_warehouse, monkeypatch):

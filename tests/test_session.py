@@ -1,10 +1,13 @@
 """Session sizing: with no overrides, get_spark sizes the JVM heap and
 the core count from the host it starts on, and its generated-code cache
-holds more classes than a session cycles through."""
+holds more classes than a session cycles through; with PySpark's
+call-site capture off, failures still raise with their error class."""
 
 from __future__ import annotations
 
 import os
+
+import pytest
 
 from cs_5542_lab_6_spark import session
 
@@ -46,3 +49,21 @@ def test_generated_code_is_reused_across_queries(spark):
         compiled.append(session.codegen_compilations(spark) - before)
     assert compiled[0] > 100
     assert compiled[1] == 0
+
+
+def test_failures_stay_loud_without_call_site_capture(spark):
+    """get_spark turns PySpark's DataFrame call-site capture off, and a
+    failing DataFrame expression still raises with its error class: an
+    ANSI divide by zero built through the column API."""
+    from pyspark.errors import PySparkException
+    from pyspark.errors.utils import is_debugging_enabled
+    from pyspark.sql import functions as F
+
+    # PySpark caches this flag process-wide at the first Column call made
+    # with an active session; get_spark sets the conf before any is made
+    assert is_debugging_enabled() is False
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    df = spark.range(2, numPartitions=1).select((F.col("id") + 1) / F.col("id"))
+    with pytest.raises(PySparkException) as err:
+        df.collect()
+    assert err.value.getCondition() == "DIVIDE_BY_ZERO"
