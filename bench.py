@@ -1,16 +1,23 @@
 #!/usr/bin/env python
 """Benchmark harness — runs the engine's headline queries at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
+``local[<session.host_cpus()>]``, writes the full record to
+``bench_results.json`` and prints it as one JSON line, followed by a
+compact summary line:
 
     {"metric": "headline_queries_total", "value": N, "unit": "sec",
      "queries": {"q": sec, ...}, "queries_detail": {...}, "sf": ...}
 
-Each query is executed to completion ``$SPARK_GRAFT_BENCH_RUNS`` times
-(default 3) and the *median* is reported as the headline number, with
-min and raw runs in ``queries_detail`` — this VM's per-query noise was
+Each query is executed to completion ``RUNS`` (3) times and the
+*median* is reported as the headline number, with min and raw runs in
+``queries_detail`` — per-query noise on a shared virtualized host was
 measured at 2-3.4x on byte-identical code, so single-shot timings
 cannot gate a 2x SLA. ``value`` is the sum of medians.
+
+The record carries what the host did during the run: the 1-minute
+``loadavg`` at start and end, the CPU time the hypervisor stole
+(``steal_pct``, per timed pass and for the whole run, from
+/proc/stat) and the storage latency (``fsync_ms``, per pass).
 
 A single-run scale-stress row (``scale_stress``) times kg_edges_build
 on a 10x-replicated documents corpus (the 25M-edge analogue) to show
@@ -29,21 +36,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-RUNS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
-SCALE_FACTOR = int(os.environ.get("SPARK_GRAFT_BENCH_SCALE", "10"))
-
-# Best calibration_sec recorded on a quiet host (r12/r13: 1.09-1.17 s
-# healthy, 1.67 s on the contaminated r13 driver run — ~1.5x hypervisor
-# steal). A run whose start probe exceeds 1.3x this bound is flagged
-# contaminated IN THE ARTIFACT (r13 verdict item 4), so a reader sees
-# "this run's numbers are noise-inflated" in the JSON itself instead of
-# reconstructing it from the probes. The default is THIS host's best
-# quiet run; on a slower machine export SPARK_GRAFT_CALIB_HEALTHY with
-# that machine's own quiet-run probe so the contaminated flag stays
-# meaningful off-host (it is artifact metadata, never a test failure).
-CALIBRATION_HEALTHY_SEC = float(
-    os.environ.get("SPARK_GRAFT_CALIB_HEALTHY", "1.09")
-)
+RUNS = 3
+SCALE_FACTOR = 10
 
 # Headline set: flagship retrieval + the scan/join/agg/window/topk shapes
 # that dominate at scale, plus one representative of each pipeline family
@@ -168,38 +162,31 @@ HEADLINE = [
 ]
 
 
-def _calibration_sec(spark) -> float:
-    """Fixed-work throughput probe: one deterministic CPU-bound Spark job
-    (xxhash64 over a 32-partition range, all cores) timed to completion.
-    Guest loadavg can't see hypervisor neighbors (this VM's noise mode:
-    two same-code runs 40 minutes apart measured 114s vs 165s TOTAL with
-    start-load 0.8 vs 0.4), but achieved throughput on identical work
-    can — a reader normalizes cross-run totals by the calibration ratio
-    before adjudicating any delta as a regression."""
-    from pyspark.sql import functions as F
+def _cpu_times() -> tuple[int, int]:
+    """(steal, total) jiffies of all CPUs since boot, from the ``cpu``
+    line of /proc/stat."""
+    with open("/proc/stat", encoding="ascii") as f:
+        fields = [int(x) for x in f.readline().split()[1:9]]
+    return fields[7], sum(fields)
 
-    runs = []
-    for _ in range(3):  # min-of-3: absorbs the one-time codegen/JIT cost
-        t0 = time.perf_counter()
-        (
-            spark.range(0, 4_096_000_000, 1, 32)
-            # mod bounds the summand so ANSI sum can't overflow a long
-            .select(F.sum(F.xxhash64("id") % 1_000_003).alias("h"))
-            .collect()
-        )
-        runs.append(round(time.perf_counter() - t0, 4))
-    return min(runs)
+
+def _steal_pct(before: tuple[int, int], after: tuple[int, int]) -> float:
+    """Percent of the CPU time between two ``_cpu_times`` readings that
+    the hypervisor gave to other guests: a slow pass with high steal was
+    slowed by its host, not its code."""
+    total = after[1] - before[1]
+    return round(100.0 * (after[0] - before[0]) / total, 2) if total else 0.0
 
 
 def _fsync_ms(n: int = 100, base_dir: str | None = None) -> float:
     """Mean milliseconds per 1 KB write+fsync — the storage-side twin of
-    the CPU calibration probe. The streaming/foreachBatch queries are
+    the steal record. The streaming/foreachBatch queries are
     checkpoint-commit bound (many small files + fsync per micro-batch),
-    so a storage noise window blows THEM up 5-30x while the CPU probe
+    so a storage noise window blows THEM up 5-30x while CPU throughput
     stays flat (observed: stream_dedup_admission passes of 62s/9s/36s in
-    one bench with calibration_sec flat at 1.05/1.04). Sampled once per
-    pass so a mid-run burst lands in the record even when start/end look
-    healthy.
+    one bench with a fixed-work CPU probe flat at 1.05/1.04 s). Sampled
+    once per pass so a mid-run burst lands in the record even when
+    start/end look healthy.
 
     ``base_dir`` should be the warehouse/checkpoint parent so the probe
     measures the SAME device the streaming checkpoints commit to — the
@@ -258,9 +245,9 @@ def _scale_stress(spark, queries) -> dict[str, int | float | list[float]]:
         # invocations purely on host noise; the per-factor minimum is the
         # least-contaminated estimate of true cost. Raw runs are recorded
         # too: a multi-minute noise window can swallow BOTH ~20s 10x runs
-        # while sparing the ~4s 1x runs (observed: ratio 16.2 with the
-        # CPU probe flat), and only the run list makes that asymmetric
-        # contamination visible to a reader of the ratio.
+        # while sparing the ~4s 1x runs (observed: ratio 16.2 with a
+        # fixed-work CPU probe flat), and only the run list makes that
+        # asymmetric contamination visible to a reader of the ratio.
         for qname in ("kg_edges_build", "dedup_minhash_lsh"):
             runs = []
             for _ in range(2):
@@ -332,21 +319,15 @@ def main() -> None:
         get_spark,
     )
 
-    # Pre-fault the heap at JVM start (session.py: AlwaysPreTouch) so
-    # this VM's intermittent slow anonymous-page backing lands at
-    # startup, outside every timed number. The bench owns its startup,
-    # so the worst observed pre-fault (214s on a degraded window) is
-    # acceptable here where it would be a timeout risk elsewhere. Param
-    # form so no subprocess can inherit the opt-in by accident.
-    spark = get_spark(app_name="cs5542-bench", pretouch=True)
+    spark = get_spark(app_name="cs5542-bench")
     load_start = round(os.getloadavg()[0], 2)
+    cpu_start = _cpu_times()
     queries = all_queries()
     names = [n for n in HEADLINE if n in queries]
 
     # Warm the JVM + file metadata cache once so per-query numbers measure
     # execution, not session startup.
     queries[names[0]](spark, SF_DIR).count()
-    calib_start = _calibration_sec(spark)
 
     # Materialize the corpus warehouse first (the reference's chunk-cache
     # idiom, agent.py:44-63): the retrieval/KG query layer then scans the
@@ -394,8 +375,10 @@ def main() -> None:
     # classes compiled from generated code per pass: 0 after the first
     # pass means every pass reused the code the session already compiled
     compiled_per_pass = []
+    steal_per_pass = []
     for _ in range(RUNS):
         compiled_before = codegen_compilations(spark)
+        cpu_before = _cpu_times()
         for name in names:
             t0 = time.perf_counter()
             _noop_materialize(queries[name](spark, SF_DIR))
@@ -408,6 +391,7 @@ def main() -> None:
             # accumulating across the whole headline set)
             clear_caches(spark)
         compiled_per_pass.append(codegen_compilations(spark) - compiled_before)
+        steal_per_pass.append(_steal_pct(cpu_before, _cpu_times()))
         # one storage sample per pass
         fsync_samples.append(_fsync_ms(base_dir=probe_dir))
     codegen = {
@@ -436,13 +420,11 @@ def main() -> None:
         sf_val = sf
     total = round(sum(timings.values()), 4)
     # noise-robust twin of the headline total (r15 verdict item 4): sum
-    # of per-query MINIMA across the interleaved passes. When
-    # ``calibration_sec.contaminated`` is true the median total is
-    # noise-inflated by construction (the r15 driver artifact read +33%
-    # on byte-identical hot paths); the min-of-runs total is the
-    # least-contaminated estimate of code-level cost and is the number
-    # to compare across rounds in that case — previously a reader had to
-    # hand-sum queries_detail[*].min to get it.
+    # of per-query MINIMA across the interleaved passes. When a pass
+    # reads high steal the median total is noise-inflated (the r15
+    # driver artifact read +33% on byte-identical hot paths); the
+    # min-of-runs total is the least-contaminated estimate of code-level
+    # cost and is the number to compare across rounds in that case.
     total_min = round(sum(d["min"] for d in detail.values()), 4)
     full = {
         "metric": "headline_queries_total",
@@ -460,22 +442,18 @@ def main() -> None:
         # load — this pair lets a reader adjudicate cross-run deltas as
         # noise vs regression without rerunning.
         "loadavg": {"start": load_start, "end": round(os.getloadavg()[0], 2)},
-        # fixed-work throughput probe at start/end (loadavg is blind to
-        # hypervisor-neighbor steal; this is not): divide two runs'
-        # totals by their calibration ratio before reading any delta as
-        # a regression. healthy_bound/contaminated are the pre-flight
-        # verdict (r13 item 4): start above 1.3x the best recorded quiet-
-        # host probe marks every number in this artifact noise-inflated.
-        "calibration_sec": {
-            "start": calib_start,
-            "end": _calibration_sec(spark),
-            "healthy_bound": round(1.3 * CALIBRATION_HEALTHY_SEC, 4),
-            "contaminated": calib_start > 1.3 * CALIBRATION_HEALTHY_SEC,
+        # percent of CPU time stolen by the hypervisor (loadavg is blind
+        # to it), per timed pass and from session start to here; no
+        # bound: a reader compares two runs' steal before reading a
+        # delta as a regression.
+        "steal_pct": {
+            "passes": steal_per_pass,
+            "run": _steal_pct(cpu_start, _cpu_times()),
         },
         # storage-latency samples, one before the first pass + one after
         # each pass: the checkpoint-bound stream queries blow up on
-        # storage bursts the CPU probe can't see — flat calibration with
-        # elevated fsync samples = storage noise window, not a regression.
+        # storage bursts that steal can't see — flat steal with elevated
+        # fsync samples = storage noise window, not a regression.
         "fsync_ms": fsync_samples,
         "codegen": codegen,
     }
@@ -511,7 +489,7 @@ def main() -> None:
                 "scale_stress": scale,
                 "sf": sf_val,
                 "loadavg": full["loadavg"],
-                "calibration_sec": full["calibration_sec"],
+                "steal_pct": full["steal_pct"],
                 "fsync_ms": fsync_samples,
                 "codegen": codegen,
                 "compact": True,

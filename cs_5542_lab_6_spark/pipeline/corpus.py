@@ -529,9 +529,9 @@ def _serving_partitions(spark: SparkSession, paths: tuple[str, ...]) -> int:
     return max(1, -(-size // split))
 
 
-# (session, stage paths) -> (their commits, the cached relations); the
+# (session, stage paths) -> (their commits, the cached relation); the
 # lock makes check-commit-then-replace atomic under a threaded server.
-_SERVING: dict[tuple, tuple[tuple, tuple[DataFrame, ...]]] = {}
+_SERVING: dict[tuple, tuple[tuple, DataFrame]] = {}
 _SERVING_LOCK = threading.Lock()
 
 
@@ -539,15 +539,15 @@ def warm_cached(
     spark: SparkSession,
     sf_dir: str,
     stages: tuple[str, ...],
-    derive: Callable[..., DataFrame | tuple[DataFrame, ...]],
-    cold: Callable[[], DataFrame | tuple[DataFrame, ...]],
-) -> DataFrame | tuple[DataFrame, ...]:
+    derive: Callable[..., DataFrame],
+    cold: Callable[[], DataFrame],
+) -> DataFrame:
     """The serving cache (see the block comment above): ``derive`` over
-    the warm ``stages`` (one ``read_stage`` each, in order), cached and
-    reused until a stage's commit changes; ``cold()`` uncached when any
-    stage is cold. ``derive`` may return one relation or a tuple; each
-    is coalesced to ``_serving_partitions`` and cached. A stage whose marker vanished after the check (a recommit
-    in progress) is served uncached."""
+    the warm ``stages`` (one ``read_stage`` each, in order), coalesced to
+    ``_serving_partitions``, cached and reused until a stage's commit
+    changes; ``cold()`` uncached when any stage is cold. A stage whose
+    marker vanished after the check (a recommit in progress) is served
+    uncached."""
     paths = tuple(_warm_path(sf_dir, st) for st in stages)
     if not all(paths):
         return cold()
@@ -558,21 +558,16 @@ def warm_cached(
     with _SERVING_LOCK:
         hit = _SERVING.get(key)
         if hit is not None and hit[0] == commits:
-            rels = hit[1]
-            for df in rels:
-                if not df._jdf.storageLevel().useMemory():
-                    df.cache()  # dropped by clear_caches: refill on next use
+            rel = hit[1]
+            if not rel._jdf.storageLevel().useMemory():
+                rel.cache()  # dropped by clear_caches: refill on next use
         else:
             if hit is not None:
-                for df in hit[1]:
-                    df.unpersist()
-            out = derive(*(read_stage(spark, p) for p in paths))
-            n = _serving_partitions(spark, paths)
-            rels = tuple(
-                df.coalesce(n).cache() for df in (out if isinstance(out, tuple) else (out,))
-            )
-            _SERVING[key] = (commits, rels)
-    return rels if len(rels) > 1 else rels[0]
+                hit[1].unpersist()
+            rel = derive(*(read_stage(spark, p) for p in paths))
+            rel = rel.coalesce(_serving_partitions(spark, paths)).cache()
+            _SERVING[key] = (commits, rel)
+    return rel
 
 
 def _stage_or(

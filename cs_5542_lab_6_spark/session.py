@@ -78,8 +78,7 @@ def mem_available_mb() -> int:
 
 def driver_memory() -> str:
     """$SPARK_GRAFT_DRIVER_MEM, else HEAP_SHARE of available memory (at
-    least MIN_HEAP_MB): the heap is committed up front when pre-touched,
-    so it must fit the host it starts on."""
+    least MIN_HEAP_MB), so the heap fits the host it starts on."""
     pinned = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
     if pinned:
         return pinned
@@ -91,7 +90,6 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    pretouch: bool = False,
 ) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
@@ -102,7 +100,6 @@ def get_spark(
     cpus = host_cpus()
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus
-    driver_mem = driver_memory()
 
     builder = (
         SparkSession.builder.master(master)
@@ -154,36 +151,8 @@ def get_spark(
         # --- per-call fixed costs (see the module docstring) -------------
         .config("spark.sql.ui.explainMode", "simple")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        .config("spark.driver.memory", driver_mem)
+        .config("spark.driver.memory", driver_memory())
     )
-    if pretouch:
-        # Pre-commit + pre-fault the whole heap at JVM start (-Xms=-Xmx +
-        # AlwaysPreTouch): this VM intermittently backs ANONYMOUS pages
-        # through a slow host fault path (first touch measured 27 us/page
-        # — 6.8 s to fault 256 MB — while file pages, fsync and warm CPU
-        # stay normal), which taxes exactly the allocation-heavy
-        # operators as their lazily-grown heap faults in mid-query: the
-        # 10x cold kg_edges derive measured 122.9/87.3 s lazy vs
-        # 41.3/26.6 s pre-touched, same code. Pre-touching moves that
-        # one-time cost to session startup, outside every timed or
-        # driver-observed number; on a healthy host it costs seconds.
-        # Applies only at JVM creation (getOrCreate reuse ignores it);
-        # one JVM per process, so each process pays it at most once.
-        # OPT-IN (bench.py and the test fixture pass pretouch=True): on
-        # a degraded window a 24g pre-fault took 130-214s, which is fine
-        # for a process that owns its startup but a timeout risk inside
-        # any harness that bounds session creation (e.g. a driver smoke
-        # check, or a CLI subprocess spawned under a test timeout).
-        # MERGE with any caller-supplied extraJavaOptions rather than
-        # last-write-wins: a caller passing their own JVM flags must not
-        # silently discard the pre-touch (or vice versa). Caller flags
-        # come second so they win any per-flag conflict.
-        extra_conf = dict(extra_conf or {})
-        caller_opts = extra_conf.pop("spark.driver.extraJavaOptions", "")
-        builder = builder.config(
-            "spark.driver.extraJavaOptions",
-            f"-Xms{driver_mem} -XX:+AlwaysPreTouch {caller_opts}".strip(),
-        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -62,40 +62,22 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 STREAM_STATE_TARGET_BYTES = 32 * 1024 * 1024
 
 
-def _stream_state_partitions(spark: SparkSession, sf_dir: str) -> int | None:
-    """Scale-adaptive state-store width for the bounded event streams
-    (guide §2.2: derive partitioning from input size, never a constant).
-
-    A stateful streaming query plans its shuffles with
-    ``spark.sql.shuffle.partitions`` AT QUERY START, bakes that count
-    into the checkpoint, and is exempt from AQE coalescing — so the
-    session default (sized to cluster cores for batch work) is wrong at
-    both ends: a 2 MB fixture pays 32 state-store instances, delta files
-    and fsyncs per trigger, while a 100 TB keyspace would want far more
-    than the local core count. Derivation: one state partition per
-    {STREAM_STATE_TARGET_BYTES} of bounded source, clamped to
-    [1, session shuffle partitions] — locally that is 1-2 partitions; at
-    scale the clamp lands on the cluster-sized session value.
-    Results are invariant to the width — the aggregations/dedup/join
-    semantics are partition-count independent (oracle-pinned), only the
-    per-trigger fixed cost changes."""
-    try:
-        nbytes = os.path.getsize(os.path.join(sf_dir, "events.parquet"))
-    except OSError:
-        return None
-    return _width_for(spark, nbytes)
-
-
 def _width_for(spark: SparkSession, nbytes: int) -> int:
     """One partition per STREAM_STATE_TARGET_BYTES of ``nbytes``,
-    clamped to [1, the session's shuffle partitions]."""
+    clamped to [1, the session's shuffle partitions] (guide §2.2: derive
+    partitioning from input size, never a constant) — locally 1-2
+    partitions; at scale the clamp lands on the cluster-sized session
+    value."""
     session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     return max(1, min(session_parts, -(-nbytes // STREAM_STATE_TARGET_BYTES)))
 
 
 def _dir_bytes(*paths: str) -> int:
+    """Bytes of the files at or under ``paths`` (a path may be a file)."""
     total = 0
     for p in paths:
+        if os.path.isfile(p):
+            total += os.path.getsize(p)
         for root, _dirs, files in os.walk(p):
             for f in files:
                 try:
@@ -107,15 +89,22 @@ def _dir_bytes(*paths: str) -> int:
 
 class _shuffle_width:
     """Temporarily set ``spark.sql.shuffle.partitions`` to a width derived
-    from the bytes under ``paths`` (one partition per
-    {STREAM_STATE_TARGET_BYTES}, clamped to [1, session width]) — the
-    same input-size derivation as ``_stream_state_partitions``, for the
-    foreachBatch micro-batch plans and their result pins: their
-    localCheckpoint/RDD materializations bypass AQE coalescing entirely
-    (profiled: a 32-task 0.4-0.5s job per micro-batch materializing a
-    ~250-row verdict relation), so the width must be right at plan time,
-    not fixed up at runtime. No-op (session width) when the dirs do not
-    exist yet.
+    from the bytes at or under ``paths`` (``_width_for``). Two kinds of
+    plan need the width right at plan time, not fixed up at runtime:
+
+    - a stateful streaming query plans its shuffles at query start,
+      bakes that count into its checkpoint and is exempt from AQE
+      coalescing, so the session default (one partition per core) would
+      give a 2 MB fixture a state-store instance, delta file and fsync
+      per core per trigger;
+    - the foreachBatch micro-batch plans and their result pins, whose
+      localCheckpoint/RDD materializations bypass AQE coalescing
+      entirely (profiled: a 32-task 0.4-0.5s job per micro-batch
+      materializing a ~250-row verdict relation).
+
+    Results are invariant to the width (oracle-pinned); only the
+    per-trigger fixed cost changes. No-op (session width) when the paths
+    do not exist yet.
 
     SINGLE-THREADED BY ASSUMPTION (r16 advice): this mutates the
     session-global ``spark.sql.shuffle.partitions`` for the duration of
@@ -144,23 +133,16 @@ class _shuffle_width:
         self.spark.conf.set("spark.sql.shuffle.partitions", self.saved)
 
 
-def _run_to_memory(
-    sdf: DataFrame, base: str, mode: str, sf_dir: str | None = None
-) -> DataFrame:
+def _run_to_memory(sdf: DataFrame, base: str, mode: str, sf_dir: str) -> DataFrame:
     """Execute a bounded streaming query to completion (availableNow) and
-    return the materialized memory-sink table. With ``sf_dir`` the
-    stateful shuffle width is derived from the source size (see
-    ``_stream_state_partitions``) for the duration of the run; the
-    session conf is restored afterwards. The sink's temp view is dropped
-    once read: the returned DataFrame keeps the rows, the catalog does
-    not."""
+    return the materialized memory-sink table. The stateful shuffle
+    width is derived from the size of ``sf_dir``'s ``events.parquet``
+    (``_shuffle_width``) for the duration of the run. The sink's temp
+    view is dropped once read: the returned DataFrame keeps the rows,
+    the catalog does not."""
     name = f"{base}_{next(_RUN_IDS)}"
     spark = sdf.sparkSession
-    parts = _stream_state_partitions(spark, sf_dir) if sf_dir else None
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        if parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+    with _shuffle_width(spark, os.path.join(sf_dir, "events.parquet")):
         q = (
             sdf.writeStream.format("memory")
             .queryName(name)
@@ -169,8 +151,6 @@ def _run_to_memory(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved)
     out = spark.table(name)
     spark.catalog.dropTempView(name)
     return out

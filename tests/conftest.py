@@ -19,25 +19,10 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    # pre-fault the heap once at JVM start (session.py: AlwaysPreTouch):
-    # keeps this VM's intermittent slow anonymous-page backing out of
-    # per-test timings and the scale canary's build-time bound. Param
-    # form, NOT the env var: subprocess-spawning tests (test_cli) must
-    # not inherit a 130-214s pre-fault inside their own timeouts.
-    #
-    # RAM floor: pretouch COMMITS AND FAULTS the full driver heap at
-    # session start; unpinned, session.driver_memory sizes it from the
-    # host's MemAvailable. Set SPARK_GRAFT_TEST_DRIVER_MEM (e.g. "4g")
-    # to pin the test JVM without touching what bench.py / the CLI use.
-    test_mem = os.environ.get("SPARK_GRAFT_TEST_DRIVER_MEM")
-    if test_mem:
-        os.environ["SPARK_GRAFT_DRIVER_MEM"] = test_mem
-    spark = get_spark(
-        app_name="cs5542-tests",
-        shuffle_partitions=8,
-        pretouch=True,
-    )
-    yield spark
+    # one session for the whole run; heap and cores come from the host
+    # (session.driver_memory / host_cpus). To pin the heap, set
+    # SPARK_GRAFT_DRIVER_MEM for the pytest process.
+    yield get_spark(app_name="cs5542-tests", shuffle_partitions=8)
 
 
 @pytest.fixture(scope="session")

@@ -354,7 +354,7 @@ def test_warm_papers_refresh_on_stage_recommit(spark, sf_dir, tmp_path, monkeypa
 
     clear_caches(spark)
     assert titles()["doc_1"] == "Rewritten 1"
-    (papers,) = C._SERVING[(spark, (str(stage),))][1]
+    papers = C._SERVING[(spark, (str(stage),))][1]
     assert papers.storageLevel.useMemory  # refilled after clear_caches
     clear_caches(spark)
 

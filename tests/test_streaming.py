@@ -41,6 +41,28 @@ def test_memory_sink_runs_leave_no_temp_view(spark, sf_dir, oracle):
         )
 
 
+def test_shuffle_width_sizes_a_single_file_source(spark, tmp_path, monkeypatch):
+    """``_shuffle_width`` over a plain file (a fixture's events.parquet)
+    sizes from the file's bytes, and restores the session's width on
+    exit, also when the body raises."""
+    from cs_5542_lab_6_spark.streaming import stream as S
+
+    src = tmp_path / "events.parquet"
+    src.write_bytes(b"x" * 100)
+    monkeypatch.setattr(S, "STREAM_STATE_TARGET_BYTES", 32)
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    with S._shuffle_width(spark, str(src)) as w:
+        # ceil(100 / 32), under the test session's width of 8
+        assert w.width == 4
+        assert spark.conf.get(key) == "4"
+    assert spark.conf.get(key) == saved
+    with pytest.raises(RuntimeError, match="body failed"):
+        with S._shuffle_width(spark, str(src)):
+            raise RuntimeError("body failed")
+    assert spark.conf.get(key) == saved
+
+
 def test_session_stream_equals_batch_twin(spark, sf_dir):
     got = {tuple(r) for r in stream_session_windows(spark, sf_dir).collect()}
     want = {tuple(r) for r in events_session_windows(spark, sf_dir).collect()}
