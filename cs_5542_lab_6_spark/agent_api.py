@@ -27,10 +27,9 @@ dimension.
 The LLM pieces are deliberately outside the engine (SURVEY §7.3): answer
 synthesis is a *deterministic template renderer* over the collected
 top-k rows (M8's prompt-assembly shape, tools.py:244-258, minus the
-chat-completion call), and ``run_research_query`` is a fixed
-vector-then-graph tool sequence standing in for the LLM dispatch loop
-(M9), including its KG→vector fallback (agent.py:185-188) and the
-citation cap (agent.py:209-211).
+chat-completion call). The dispatch loop (M9) that calls these tools
+is ``agent_loop.ResearchAgent``, which the server, the CLI and the
+benchmark drive.
 """
 
 from __future__ import annotations
@@ -55,7 +54,6 @@ from .registry import query
 
 DEFAULT_TOP_K = 5
 CITATION_CAP = 5  # agent.py:209-211 citations[:5]
-RETRIEVAL_FAILURE_SCORE = 0.3246  # task4_evaluation_report.md:26-28
 
 
 def _retrieval(chunks: DataFrame, papers: DataFrame) -> DataFrame:
@@ -160,36 +158,6 @@ def summarize_context(question: str, chunks: list[dict[str, Any]]) -> str:
         f"A: Based on [1] ({top.get('chunk_id', '?')}, "
         f"score={top.get('score', 0)}), see cited context."
     )
-
-
-def run_research_query(
-    spark: SparkSession, sf_dir: str, question: str, top_k: int = DEFAULT_TOP_K
-) -> dict[str, Any]:
-    """M9's dispatch loop as a fixed deterministic sequence: vector search
-    → (fallback guaranteed: KG search when vector scores signal retrieval
-    failure, mirroring agent.py:185-188's KG→vector fallback) → forced
-    summarize (agent.py:204-211). Returns the reference's answer shape
-    (agent.py:216-228) minus latency."""
-    hits = search_papers(spark, sf_dir, question, top_k).collect()
-    citations = [r.asDict() for r in hits]
-    tools_used = ["search_papers"]
-    top_score = citations[0]["score"] if citations else 0.0
-    if top_score < RETRIEVAL_FAILURE_SCORE:
-        tools_used.append("search_knowledge_graph")
-        # entity extraction from the query: whitespace tokens through the
-        # same normalize-filter contract (tools.py:164-177); normalization
-        # and the min-length filter happen inside the neighborhood query
-        kg = search_knowledge_graph(spark, sf_dir, question.split()).collect()
-        citations += [r.asDict() for r in kg]
-    tools_used.append("summarize_context")
-    answer = summarize_context(question, citations)
-    return {
-        "answer": answer,
-        "citations": citations[:CITATION_CAP],
-        "tools_used": tools_used,
-        "steps": len(tools_used),
-        "retrieval_failure": top_score < RETRIEVAL_FAILURE_SCORE,
-    }
 
 
 # ---------------------------------------------------------------------------

@@ -146,13 +146,18 @@ def _load_artifact_encoder(path: str):
 
 def _load_real_encoder():
     """Real encoder when $SPARK_GRAFT_EMBED_MODEL is set; None otherwise
-    (and the hash projection stays in charge). A path to an existing
-    ``.npz`` file loads the from-disk artifact encoder; any other value
-    is treated as a sentence-transformers model name."""
+    (and the hash projection stays in charge). A path to a ``.npz``
+    file loads the from-disk artifact encoder; any other value
+    is treated as a sentence-transformers model name; a missing ``.npz``
+    path raises ``FileNotFoundError``."""
     name = os.environ.get(EMBED_MODEL_ENV)
     if not name:
         return None
-    if name.endswith(".npz") and os.path.exists(name):
+    if name.endswith(".npz"):
+        if not os.path.exists(name):
+            raise FileNotFoundError(
+                f"{EMBED_MODEL_ENV} points to a missing artifact: {name}"
+            )
         return _load_artifact_encoder(name)
     from sentence_transformers import SentenceTransformer  # lazy heavy import
 
@@ -223,14 +228,14 @@ def embed_signature(col: Column | str) -> Column:
     return embed_signature_udf(c)
 
 
-def duck_embedding_sig_cte(id_col: str = "chunk_id") -> str:
+def duck_embedding_sig_cte() -> str:
     """DuckDB twin of ``embed_signature`` — appends an ``emb_sig`` CTE to
     ``duck_embedding_cte`` (requires its ``emb_sums`` CTE in scope)."""
-    return f"""
+    return """
 emb_sig AS (
-  SELECT {id_col},
+  SELECT chunk_id,
          string_agg(CAST(n AS VARCHAR), ',' ORDER BY i) AS embedding_sig
-  FROM emb_sums GROUP BY {id_col}
+  FROM emb_sums GROUP BY chunk_id
 )
 """
 
@@ -256,46 +261,44 @@ def duck_qvec_sql(text: str) -> str:
     return "[" + ", ".join(repr(x) for x in embed_query_f32(text)) + "]::DOUBLE[]"
 
 
-def duck_embedding_cte(
-    src: str = "chunks", id_col: str = "chunk_id", text_col: str = "text_content"
-) -> str:
+def duck_embedding_cte() -> str:
     """DuckDB twin of ``embed_text``: CTE chain ending in
-    ``emb({id_col}, embedding FLOAT[])``, bit-identical to the pandas UDF
+    ``emb(chunk_id, embedding FLOAT[])``, bit-identical to the pandas UDF
     (verified in tests/test_oracle_parity.py via the embedder queries).
-    Rows of ``{src}`` must have ≥1 token — the zero-vector branch has no
+    Rows of ``chunks`` must have ≥1 token — the zero-vector branch has no
     SQL twin (never exercised: chunks are min-words filtered)."""
     return f"""
 emb_toks AS (
-  SELECT {id_col},
+  SELECT chunk_id,
          unnest(regexp_split_to_array(
-           regexp_replace(lower({text_col}), '^\\s+|\\s+$', '', 'g'), '\\s+')) AS tok
-  FROM {src}
+           regexp_replace(lower(text_content), '^\\s+|\\s+$', '', 'g'), '\\s+')) AS tok
+  FROM chunks
 ),
 emb_h AS (
-  SELECT {id_col},
+  SELECT chunk_id,
          CAST(concat('0x', substr(sha256(tok), 1, 15)) AS BIGINT) % {_P} AS h31
   FROM emb_toks
 ),
 emb_dims AS (
-  SELECT {id_col}, i,
+  SELECT chunk_id, i,
          (104729 * (i + 1)) % {_P} AS a,
          (15485863 * (i + 1)) % {_P} AS b,
          h31
   FROM emb_h, (SELECT unnest(range(0, {EMBED_DIM})) AS i) dims
 ),
 emb_sums AS (
-  SELECT {id_col}, i,
+  SELECT chunk_id, i,
          CAST(2 * SUM((h31 * a + b) % {_P}) - COUNT(*) * {_P} AS BIGINT) AS n
-  FROM emb_dims GROUP BY {id_col}, i
+  FROM emb_dims GROUP BY chunk_id, i
 ),
 emb_norm AS (
-  SELECT {id_col}, sqrt(CAST(SUM(CAST(n AS HUGEINT) * n) AS DOUBLE)) AS nrm
-  FROM emb_sums GROUP BY {id_col}
+  SELECT chunk_id, sqrt(CAST(SUM(CAST(n AS HUGEINT) * n) AS DOUBLE)) AS nrm
+  FROM emb_sums GROUP BY chunk_id
 ),
 emb AS (
-  SELECT s.{id_col},
+  SELECT s.chunk_id,
          array_agg(CAST(CAST(n AS DOUBLE) / nrm AS FLOAT) ORDER BY i) AS embedding
-  FROM emb_sums s JOIN emb_norm USING ({id_col})
-  GROUP BY s.{id_col}
+  FROM emb_sums s JOIN emb_norm USING (chunk_id)
+  GROUP BY s.chunk_id
 )
 """

@@ -53,13 +53,18 @@ def _load_gazetteer_extractor(path: str):
 
 def _load_real_extractor():
     """Real extractor when $SPARK_GRAFT_NER_MODEL is set; None otherwise
-    (the Catalyst tokenizer substitute stays in charge). A path to an
-    existing ``.json`` file loads the gazetteer artifact; any other value
-    is treated as a spaCy model name."""
+    (the Catalyst tokenizer substitute stays in charge). A path to a
+    ``.json`` file loads the gazetteer artifact; any other value is
+    treated as a spaCy model name; a missing ``.json`` path raises
+    ``FileNotFoundError``."""
     name = os.environ.get(NER_MODEL_ENV)
     if not name:
         return None
-    if name.endswith(".json") and os.path.exists(name):
+    if name.endswith(".json"):
+        if not os.path.exists(name):
+            raise FileNotFoundError(
+                f"{NER_MODEL_ENV} points to a missing artifact: {name}"
+            )
         return _load_gazetteer_extractor(name)
     import spacy  # lazy heavy import, resolved once per Python worker
 

@@ -27,9 +27,10 @@ from ..sources import load_table
 # ---------------------------------------------------------------------------
 
 
-@query(
-    "orders_scd2_dimension",
-    oracle="""
+# One customer's order-priority history as SCD2 versions, rebuilt from
+# the full orders table: the oracle of the full build, the incremental
+# apply (operators below) and the streaming apply (streaming/stream.py).
+SCD2_ORACLE = """
     WITH seq AS (
       SELECT o_custkey, o_orderpriority, o_orderdate, o_orderkey,
              lag(o_orderpriority) OVER w AS prev_prio
@@ -50,7 +51,12 @@ from ..sources import load_table
     FROM changes
     WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
     ORDER BY o_custkey, version
-    """,
+    """
+
+
+@query(
+    "orders_scd2_dimension",
+    oracle=SCD2_ORACLE,
 )
 def orders_scd2_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Slowly-changing-dimension type-2 build (Kimball): each customer's
@@ -533,28 +539,7 @@ SCD2_CUT = "1999-01-01"   # base = orders before the cut; delta = the rest
     # The oracle is the FULL-HISTORY recompute: the incremental plan is
     # correct iff delta-apply is indistinguishable from rebuilding the
     # dimension from scratch.
-    oracle="""
-    WITH seq AS (
-      SELECT o_custkey, o_orderpriority, o_orderdate, o_orderkey,
-             lag(o_orderpriority) OVER w AS prev_prio
-      FROM orders
-      WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-    ),
-    changes AS (
-      SELECT o_custkey, o_orderpriority, o_orderdate, o_orderkey
-      FROM seq
-      WHERE prev_prio IS NULL OR prev_prio <> o_orderpriority
-    )
-    SELECT o_custkey,
-           CAST(row_number() OVER w AS INTEGER) AS version,
-           o_orderpriority AS priority,
-           o_orderdate AS valid_from,
-           lead(o_orderdate) OVER w AS valid_to,
-           (lead(o_orderdate) OVER w IS NULL) AS is_current
-    FROM changes
-    WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-    ORDER BY o_custkey, version
-    """,
+    oracle=SCD2_ORACLE,
 )
 def orders_scd2_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental SCD2 maintenance (the MERGE the full rebuild in

@@ -188,7 +188,6 @@ def _chunk_documents(
     overlap: int = CHUNK_OVERLAP,
     min_words: int = MIN_CHUNK_WORDS,
     with_abstract: bool = True,
-    with_tokens: bool = False,
 ) -> DataFrame:
     """Word-window chunker (reference: data/ingestion.py:173-185,200-222).
 
@@ -200,17 +199,7 @@ def _chunk_documents(
 
     Implementation: ``sequence`` builds the start offsets, ``explode``
     fans them out, ``slice`` takes each window — one row in, many rows
-    out with no Python and no shuffle.
-
-    ``with_tokens=True`` additionally carries the window's word ARRAY
-    (``toks``) next to the joined string. ``text_content`` is
-    ``array_join(toks, ' ')`` and the words contain no whitespace, so
-    ``words(text_content) == toks`` definitionally
-    (tests/test_corpus_invariants.py pins the equivalence). Note:
-    exploding ``toks`` directly measured ~2x SLOWER than the
-    join+re-split on the cold 10x corpus (Generate over a computed
-    array pays per-row array copying), so chunk_entities_df
-    deliberately keeps the string path — see its inline note."""
+    out with no Python and no shuffle."""
     step = size - overlap
     c = cleaned_documents(spark, sf_dir, spread=True).select(
         "paper_id", words("text").alias("w")
@@ -259,7 +248,6 @@ def _chunk_documents(
             "chunk_index",
             "section_name",
             F.array_join("toks", " ").alias("text_content"),
-            *(["toks"] if with_tokens else []),
             "word_count",
             F.lit(INGESTED_AT).cast("timestamp").alias("ingested_at"),
         )

@@ -59,7 +59,11 @@ MIN_HEAP_MB = 1024
 # each (about 65 MB with the cache full). Spark's default of 100 is
 # smaller than one query_suite pass (about 175 classes), so the LRU
 # evicted every class before its reuse and each pass recompiled 170-172
-# of them; with this size every pass after the first compiles none.
+# of them. With this size a query_suite pass after the first compiles
+# none; over bench.py's 95 headline queries (sf0.1) the passes compiled
+# 1,909, then 182 and 134 classes (bench_results.json): the rest is
+# not eviction but code whose class name carries the whole-stage stage
+# id, which AQE numbers differently between runs (ROADMAP direction 6).
 CODEGEN_CACHE_ENTRIES = 4096
 
 

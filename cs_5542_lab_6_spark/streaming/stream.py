@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import itertools
 import os
+from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -437,34 +438,6 @@ def stream_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("click_id", "purchase_id")
 
 
-def write_metrics_stream(spark: SparkSession, sf_dir: str, out_dir: str) -> int:
-    """foreachBatch append sink: per-micro-batch metrics rows appended to
-    a parquet log — the streaming form of the APP.EVAL_METRICS append
-    pattern (sql/01_create_schema.sql:97-108, backend/app.py:42-71).
-    Returns the number of micro-batches processed."""
-    ev = stream_events(spark, sf_dir)
-    batches = []
-
-    def _log_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.groupBy("event_type")
-            .agg(F.count("*").alias("n_events"), _dsum("value", "total_value"))
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(out_dir)
-        )
-        batches.append(batch_id)
-
-    q = (
-        ev.writeStream.foreachBatch(_log_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", out_dir + "/_checkpoint")
-        .start()
-    )
-    q.awaitTermination()
-    return len(batches)
-
-
 HEAVY_USER_MIN_EVENTS = 66  # fixture median — both tiers well-populated
 
 
@@ -516,7 +489,11 @@ def stream_user_enriched_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def write_metrics_stream_idempotent(spark: SparkSession, sf_dir: str, out_dir: str) -> int:
-    """Replay-safe (exactly-once) variant of ``write_metrics_stream``.
+    """foreachBatch metrics sink, exactly-once: per-micro-batch metrics
+    rows (event_type, n_events, total_value, batch_id) written to a
+    parquet log — the streaming form of the APP.EVAL_METRICS append
+    pattern (sql/01_create_schema.sql:97-108, backend/app.py:42-71).
+    Returns the number of micro-batches processed.
 
     foreachBatch gives at-least-once delivery: after a crash between the
     sink write and the checkpoint commit, the SAME batch_id is re-run,
@@ -577,6 +554,37 @@ def write_metrics_stream_idempotent(spark: SparkSession, sf_dir: str, out_dir: s
 
 
 TOP_PURCHASES_K = 3
+TOP_PURCHASES_SCHEMA = (
+    "user_id long, n_purchases long, top1 double, top2 double, top3 double"
+)
+
+
+def update_top_purchases(key, pdfs: Iterator, state):
+    """applyInPandasWithState update function: fold the batch's purchase
+    values into the flat state tuple (n, v1, v2, v3), None-padded, and
+    emit the user's running count and top values."""
+    import pandas as pd
+
+    if state.exists:
+        n, *vs = state.get
+        vals = [v for v in vs if v is not None]
+    else:
+        n, vals = 0, []
+    for pdf in pdfs:
+        n += len(pdf)
+        vals.extend(float(v) for v in pdf["value"])
+    top = sorted(vals, reverse=True)[:TOP_PURCHASES_K]
+    pad = top + [None] * (TOP_PURCHASES_K - len(top))
+    state.update((n, *pad))
+    yield pd.DataFrame(
+        {
+            "user_id": [key[0]],
+            "n_purchases": [n],
+            "top1": [pad[0]],
+            "top2": [pad[1]],
+            "top3": [pad[2]],
+        }
+    )
 
 
 @query(
@@ -605,18 +613,8 @@ def stream_user_top_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming state — bounded-top-k state semantics, a different shape
     from stream_user_stats_stateful's monotone counters.
 
-    Two physical paths, one contract (functions/tws.py):
-
-    - ``transformWithStateInPandas`` (Spark 4's successor stateful API):
-      a ``StatefulProcessor`` holding TYPED state — a ValueState counter
-      plus a ListState of the running top values. This is the production
-      path; its per-batch emission logic is unit-tested against the
-      contract directly (tests/test_streaming.py). The API's Python
-      driver worker requires protobuf, which this container lacks, so
-      the path is gated on importability and exercised when available.
-    - ``applyInPandasWithState`` fallback with the IDENTICAL emission
-      contract (same update function, tuple-encoded state) — what runs
-      here, keeping the query driver-checkable end to end.
+    The state is ``applyInPandasWithState``'s flat GroupState tuple (a
+    counter plus the running top values, ``update_top_purchases``).
 
     Determinism under availableNow batching: the counter and every
     top-k slot are monotone nondecreasing across emissions (new rows
@@ -626,36 +624,21 @@ def stream_user_top_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At scale: state is one counter + {TOP_PURCHASES_K} doubles per user,
     partitioned by the grouping key; RocksDB-backed with changelog
-    checkpointing in production, eviction via ttlDurationMs/timers."""
-    from ..functions.tws import (
-        TOP_PURCHASES_SCHEMA,
-        top_purchases_processor,
-        tws_available,
-        update_top_purchases,
-    )
+    checkpointing in production, eviction via GroupState timeouts."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
     purchases = (
         stream_events(spark, sf_dir)
         .filter(F.col("event_type") == "purchase")
         .select("user_id", "value")
     )
-    if tws_available():
-        emitted = purchases.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=top_purchases_processor(),
-            outputStructType=TOP_PURCHASES_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    else:
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
-        emitted = purchases.groupBy("user_id").applyInPandasWithState(
-            update_top_purchases,
-            outputStructType=TOP_PURCHASES_SCHEMA,
-            stateStructType="n long, v1 double, v2 double, v3 double",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    emitted = purchases.groupBy("user_id").applyInPandasWithState(
+        update_top_purchases,
+        outputStructType=TOP_PURCHASES_SCHEMA,
+        stateStructType="n long, v1 double, v2 double, v3 double",
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
     out = _run_to_memory(emitted, "stream_top_purchases", "update", sf_dir)
     return (
         out.groupBy("user_id")
@@ -1131,6 +1114,7 @@ def dedup_admission_stream_run(
 
 
 from ..operators.dedup import DEDUP_INCREMENTAL_ORACLE  # noqa: E402
+from ..operators.lakehouse import SCD2_ORACLE  # noqa: E402
 
 
 @query(
@@ -1180,28 +1164,7 @@ def stream_dedup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_scd2_apply",
-    oracle="""
-    WITH seq AS (
-      SELECT o_custkey, o_orderpriority, o_orderdate, o_orderkey,
-             lag(o_orderpriority) OVER w AS prev_prio
-      FROM orders
-      WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-    ),
-    changes AS (
-      SELECT o_custkey, o_orderpriority, o_orderdate, o_orderkey
-      FROM seq
-      WHERE prev_prio IS NULL OR prev_prio <> o_orderpriority
-    )
-    SELECT o_custkey,
-           CAST(row_number() OVER w AS INTEGER) AS version,
-           o_orderpriority AS priority,
-           o_orderdate AS valid_from,
-           lead(o_orderdate) OVER w AS valid_to,
-           (lead(o_orderdate) OVER w IS NULL) AS is_current
-    FROM changes
-    WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-    ORDER BY o_custkey, version
-    """,
+    oracle=SCD2_ORACLE,
 )
 def stream_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming SCD2 maintenance (r10 verdict item 6): the post-cut

@@ -1,14 +1,12 @@
-"""Agent tool façade tests (M8–M9): the 4-tool surface composes over the
-engine, the orchestrator is deterministic, and the summarizer renders the
-reference's context-block shape."""
+"""Agent tool façade tests (M8): the 4-tool surface composes over the
+engine and the summarizer renders the reference's context-block shape
+(the dispatch loop is pinned in tests/test_agent_loop.py)."""
 
 from __future__ import annotations
 
 import pytest
 
 from cs_5542_lab_6_spark.agent_api import (
-    CITATION_CAP,
-    run_research_query,
     search_knowledge_graph,
     search_papers,
     summarize_context,
@@ -76,15 +74,3 @@ def test_summarize_context_deterministic():
     assert "[1] Title: Document 1 | Section: body" in a
     assert "score=0.91" in a
     assert summarize_context("q", []).endswith("No relevant context retrieved.")
-
-
-def test_run_research_query_shape(spark, sf_dir):
-    out = run_research_query(spark, sf_dir, "spark join performance", top_k=3)
-    assert set(out) == {"answer", "citations", "tools_used", "steps",
-                        "retrieval_failure"}
-    assert out["tools_used"][0] == "search_papers"
-    assert out["tools_used"][-1] == "summarize_context"
-    assert len(out["citations"]) <= CITATION_CAP
-    # deterministic end to end
-    again = run_research_query(spark, sf_dir, "spark join performance", top_k=3)
-    assert again["answer"] == out["answer"]

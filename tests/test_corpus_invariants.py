@@ -73,26 +73,6 @@ def test_papers_pk_unique(spark, sf_dir):
     assert papers.count() == papers.select("paper_id").distinct().count()
 
 
-@pytest.mark.slow
-def test_chunker_token_array_equals_text_resplit(spark, sf_dir):
-    """with_tokens=True carries the window's word array next to the
-    joined string; words(text_content) must equal toks row-for-row
-    (the invariant that lets chunk_entities_df skip the join+re-split —
-    r8 cold-build optimization)."""
-    from pyspark.sql import functions as F
-
-    from cs_5542_lab_6_spark.functions.text import words
-    from cs_5542_lab_6_spark.pipeline.corpus import _chunk_documents
-
-    chunks = _chunk_documents(spark, sf_dir, with_tokens=True)
-    bad = chunks.filter(
-        ~(words(F.col("text_content")) == F.col("toks"))
-    ).count()
-    assert bad == 0
-    # and the default schema is unchanged (no toks leak into chunks_build)
-    assert "toks" not in _chunk_documents(spark, sf_dir).columns
-
-
 def test_trigram_search_edge_cases(spark, tmp_path):
     """Sub-3-char and empty documents flow through the trigram index
     without junk grams (Spark's sequence(1,0) DESCENDS — the length

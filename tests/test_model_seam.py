@@ -273,3 +273,20 @@ def test_missing_npz_artifact_raises_file_not_found(monkeypatch):
     with pytest.raises(FileNotFoundError, match="scorer.npz"):
         rerank._load_real_scorer()
     rerank._SCORER = None
+
+
+@pytest.mark.parametrize(
+    "seam, env, path",
+    [
+        (embedding._load_real_encoder, embedding.EMBED_MODEL_ENV, "/nonexistent/model.npz"),
+        (ner._load_real_extractor, ner.NER_MODEL_ENV, "/nonexistent/gaz.json"),
+    ],
+)
+def test_missing_artifact_names_variable_and_path(monkeypatch, seam, env, path):
+    """A configured-but-missing artifact path for the embedding or NER
+    seam raises FileNotFoundError naming the variable and the path,
+    instead of being read as a library model name (an ImportError for
+    an absent library, or a model download)."""
+    monkeypatch.setenv(env, path)
+    with pytest.raises(FileNotFoundError, match=f"{env}.*{path}"):
+        seam()

@@ -1,6 +1,6 @@
 """Streaming-specific checks beyond the oracle parity sweep: the
-foreachBatch metrics sink writes real files, and the streaming plans agree
-with their batch twins row-for-row."""
+exactly-once foreachBatch metrics sink writes real files, and the
+streaming plans agree with their batch twins row-for-row."""
 
 from __future__ import annotations
 
@@ -18,7 +18,6 @@ from cs_5542_lab_6_spark.streaming.batch_twins import (
 from cs_5542_lab_6_spark.streaming.stream import (
     stream_session_windows,
     stream_tumbling_daily,
-    write_metrics_stream,
 )
 
 
@@ -69,43 +68,37 @@ def test_session_stream_equals_batch_twin(spark, sf_dir):
     assert got == want
 
 
-def test_foreach_batch_metrics_sink(spark, sf_dir, tmp_path):
-    out = str(tmp_path / "metrics_log")
-    n_batches = write_metrics_stream(spark, sf_dir, out)
-    assert n_batches >= 1
-    log = spark.read.parquet(out)
-    assert set(log.columns) == {"event_type", "n_events", "total_value", "batch_id"}
-    # the appended log accounts for every event exactly once
-    total = sum(r["n_events"] for r in log.collect())
-    from cs_5542_lab_6_spark.sources import load_table
-
-    assert total == load_table(spark, sf_dir, "events").count()
-
-
 def test_idempotent_foreach_batch_survives_replay(spark, sf_dir, tmp_path):
     """Exactly-once property: re-running the stream from a FRESH
     checkpoint against the SAME output directory (the worst-case replay
     — every batch re-delivered) must leave the output byte-identical to
     a single run, because each batch overwrites its own batch_id
-    partition instead of appending."""
+    partition instead of appending. After each run the log has the
+    sink's columns and accounts for every event exactly once."""
     import shutil
 
+    from cs_5542_lab_6_spark.sources import load_table
     from cs_5542_lab_6_spark.streaming.stream import write_metrics_stream_idempotent
+
+    n_events = load_table(spark, sf_dir, "events").count()
+
+    def read_log():
+        log = spark.read.parquet(out)
+        assert set(log.columns) == {"event_type", "n_events", "total_value", "batch_id"}
+        rows = log.drop("batch_id").collect()
+        assert sum(r["n_events"] for r in rows) == n_events
+        return sorted(tuple(r) for r in rows)
 
     out = str(tmp_path / "metrics")
     n1 = write_metrics_stream_idempotent(spark, sf_dir, out)
     assert n1 >= 1
-    first = sorted(
-        tuple(r) for r in spark.read.parquet(out).drop("batch_id").collect()
-    )
+    first = read_log()
 
     # simulate the replay: wipe the checkpoint (not the data) and re-run
     shutil.rmtree(out + "/_checkpoint")
     n2 = write_metrics_stream_idempotent(spark, sf_dir, out)
     assert n2 == n1
-    second = sorted(
-        tuple(r) for r in spark.read.parquet(out).drop("batch_id").collect()
-    )
+    second = read_log()
     assert second == first  # no duplicated rows, no drift
 
 
@@ -143,21 +136,14 @@ def test_idempotent_sink_drops_stale_batch_tail(spark, sf_dir, tmp_path):
     assert after == clean
 
 
-def test_tws_processor_and_fallback_emit_identically():
-    """stream_user_top_purchases' two stateful paths (functions/tws.py):
-    the transformWithStateInPandas StatefulProcessor and the
-    applyInPandasWithState update function must emit the SAME rows for
-    the same micro-batch sequence. The processor runs against fake typed
-    handles here because the real TWS driver worker needs protobuf
-    (absent from this container); the registered query's oracle checks
-    whichever path executes."""
+def test_update_top_purchases_folds_batches():
+    """stream_user_top_purchases' applyInPandasWithState update function
+    over a fake GroupState: three micro-batches for one user fold into
+    the running count and top-3 values, and the state carries them
+    from batch to batch."""
     import pandas as pd
 
-    from cs_5542_lab_6_spark.functions.tws import (
-        top_purchases_processor,
-        tws_available,
-        update_top_purchases,
-    )
+    from cs_5542_lab_6_spark.streaming.stream import update_top_purchases
 
     batches = [
         pd.DataFrame({"value": [5.0, 1.0]}),
@@ -165,7 +151,6 @@ def test_tws_processor_and_fallback_emit_identically():
         pd.DataFrame({"value": [7.25]}),
     ]
 
-    # --- applyInPandasWithState twin with a fake GroupState ----------
     class FakeGroupState:
         def __init__(self):
             self._v = None
@@ -182,99 +167,12 @@ def test_tws_processor_and_fallback_emit_identically():
             self._v = v
 
     gs = FakeGroupState()
-    fallback_rows = [
-        next(update_top_purchases((42,), iter([b]), gs)) for b in batches
-    ]
-
-    # --- StatefulProcessor with fake typed handles --------------------
-    class FakeValueState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-    class FakeListState:
-        def __init__(self):
-            self._rows = []
-
-        def get(self):
-            return iter(self._rows)
-
-        def clear(self):
-            self._rows = []
-
-        def put(self, rows):
-            self._rows = list(rows)
-
-    class FakeHandle:
-        def __init__(self):
-            self.states = {}
-
-        def getValueState(self, name, schema, ttlDurationMs=None):
-            return self.states.setdefault(name, FakeValueState())
-
-        def getListState(self, name, schema, ttlDurationMs=None):
-            return self.states.setdefault(name, FakeListState())
-
-    proc = top_purchases_processor()
-    proc.init(FakeHandle())
-    tws_rows = [
-        next(proc.handleInputRows((42,), iter([b]), None)) for b in batches
-    ]
-    proc.close()
-
-    for a, b in zip(fallback_rows, tws_rows):
-        pd.testing.assert_frame_equal(a, b)
+    rows = [next(update_top_purchases((42,), iter([b]), gs)) for b in batches]
     # final state after the drained sequence: count 6, top-3 of all values
-    final = tws_rows[-1].iloc[0]
+    final = rows[-1].iloc[0]
     assert final["n_purchases"] == 6
     assert [final["top1"], final["top2"], final["top3"]] == [9.5, 7.25, 5.0]
-    # the container gate: this environment lacks protobuf, so the
-    # registered query exercised the fallback; on a protobuf-equipped
-    # cluster the same contract runs through the real TWS worker
-    assert tws_available() in (True, False)
-
-
-@pytest.mark.real_tws
-def test_real_transform_with_state_matches_fallback(spark, sf_dir):
-    """Runs the TRUE transformWithStateInPandas operator end-to-end
-    (r8 verdict item 6) and pins its emissions to the
-    applyInPandasWithState twin that stands in where protobuf is
-    absent. Self-skips with a reason on containers without protobuf —
-    on a protobuf-equipped cluster this is the proof the production
-    stateful path emits byte-identically to the driver-checked one."""
-    from cs_5542_lab_6_spark.functions import tws
-    from cs_5542_lab_6_spark.streaming.stream import stream_user_top_purchases
-
-    if not tws.tws_available():
-        pytest.skip(
-            "transformWithStateInPandas needs the protobuf runtime for "
-            "its Python driver worker; this environment lacks it — the "
-            "applyInPandasWithState twin covers the contract instead"
-        )
-
-    real = sorted(
-        tuple(r) for r in stream_user_top_purchases(spark, sf_dir).collect()
-    )
-
-    # force the fallback path on a second run and compare
-    orig = tws.tws_available
-    tws.tws_available = lambda: False
-    try:
-        fallback = sorted(
-            tuple(r) for r in stream_user_top_purchases(spark, sf_dir).collect()
-        )
-    finally:
-        tws.tws_available = orig
-
-    assert real == fallback
+    assert gs.get == (6, 9.5, 7.25, 5.0)
 
 
 def test_lateness_audit_drop_rule_matches_real_stream(spark, sf_dir, tmp_path):

@@ -46,6 +46,7 @@ def main() -> None:
 
     from cs_5542_lab_6_spark.pipeline import corpus
     from cs_5542_lab_6_spark.pipeline.ingest import build_corpus
+    from cs_5542_lab_6_spark.plans.inspect import formatted_plan
     from cs_5542_lab_6_spark.registry import all_queries
     from cs_5542_lab_6_spark.session import clear_caches, get_spark
 
@@ -66,10 +67,7 @@ def main() -> None:
     if args.plan_dir:
         os.makedirs(args.plan_dir, exist_ok=True)
         for name in names:
-            df = queries[name](spark, SF_DIR)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
+            plan = formatted_plan(queries[name](spark, SF_DIR))
             path = os.path.join(args.plan_dir, f"{name}_{args.suffix}.txt")
             with open(path, "w") as fh:
                 fh.write(plan)
